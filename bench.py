@@ -2,7 +2,7 @@
 sf0.1) on local[$SPARK_GRAFT_CPUS], plus crawl-engine and payload-path
 throughput on deterministic bench fixtures.
 
-Prints ONE JSON line:
+Prints ONE JSON line, the last line on stdout:
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {...per-query MEDIAN sec...}, "trials": {...per-query [s,s,s]...},
    "sf": ..., "crawl_urls_per_sec": ..., "images_per_sec": ...}
@@ -18,7 +18,7 @@ the same median-of-N treatment (fresh store per crawl trial).
 
 Scaling-efficiency evidence (N vs 4N cores) lives in scripts/scaling_bench.py
 (two JVMs can't share one bench process); its results are recorded in
-BASELINE.md.
+BASELINE.md, not in this JSON.
 """
 
 from __future__ import annotations
@@ -99,8 +99,13 @@ def main() -> None:
     spark = get_spark(
         app="csxj-bench", master=f"local[{CPUS}]",
         shuffle_partitions=int(CPUS),
-        extra={"spark.local.dir": os.path.join(_SCRATCH, "csxj_bench_local")},
+        extra={
+            "spark.local.dir": os.path.join(_SCRATCH, "csxj_bench_local"),
+            # no progress bars or INFO logs around the JSON line
+            "spark.ui.showConsoleProgress": "false",
+        },
     )
+    spark.sparkContext.setLogLevel("ERROR")
     sf = SF_DIR
     from csxj_crawler_spark.queries import dedupops, relational, simops, textops
 
@@ -233,47 +238,6 @@ def main() -> None:
 
     total = round(time.time() - t_all, 3)
 
-    # the judged N→4N scaling evidence (BASELINE.json north_rule) is recorded
-    # by scripts/scaling_bench.py runs (two pinned-cpuset parallelism levels,
-    # 2 vs 8 cores, same 96M-URL input); surface the recorded runs and the
-    # pre-registered three-run-median aggregate here so BENCH_r{N}.json
-    # carries throughput at both levels plus the efficiency, per the brief
-    scaling: dict = {}
-    try:
-        import glob
-        import statistics
-
-        here = os.path.dirname(os.path.abspath(__file__))
-        runs = []
-        for p in sorted(glob.glob(os.path.join(here, "bench_runs", "scaling_r04_run[123].json"))):
-            with open(p) as f:
-                d = json.loads(f.read().strip().splitlines()[-1])
-            levels = d.get("levels", {})
-            lo, hi = (levels.get(k, {}) for k in sorted(levels, key=int)[:2]) if len(levels) >= 2 else ({}, {})
-            runs.append(
-                {
-                    "file": os.path.basename(p),
-                    "paired": d.get("scaling_efficiency"),
-                    "level_median": d.get("scaling_efficiency_level_median"),
-                    "low_cores": lo.get("cores"),
-                    "high_cores": hi.get("cores"),
-                    "low_urls_per_sec": lo.get("urls_per_sec"),
-                    "high_urls_per_sec": hi.get("urls_per_sec"),
-                }
-            )
-        if runs:
-            med_paired = statistics.median(r["paired"] for r in runs)
-            med_level = statistics.median(r["level_median"] for r in runs)
-            scaling = {
-                "scaling_runs_recorded": runs,
-                "scaling_median_paired": round(med_paired, 3),
-                "scaling_median_level_median": round(med_level, 3),
-                "scaling_rule_pass": bool(med_paired >= 0.8 and med_level >= 0.8),
-                "scaling_runs_complete": len(runs) >= 3,
-            }
-    except Exception as e:  # never fail the bench over evidence reporting
-        scaling = {"scaling_runs_recorded": f"unreadable: {e}"}
-
     out = {
         "metric": "headline queries + crawl/payload throughput (per-query median of interleaved trials)",
         "value": round(sum(times.values()), 3),
@@ -292,10 +256,9 @@ def main() -> None:
         "cpus": int(CPUS),
         "ambient_bw_gbps_start": bw_start,
         "ambient_bw_gbps_end": _ambient_bw_gbps(),
-        **scaling,
     }
-    print(json.dumps(out))
     spark.stop()
+    print(json.dumps(out), flush=True)
 
 
 if __name__ == "__main__":

@@ -12,14 +12,27 @@ Scale design (10^10-URL frontier, BASELINE.json:14):
 * The frontier ("queued") and seen tables are snapshot-versioned parquet
   partitioned by ``host_bucket`` — manifest-level pruning + co-located
   bucket joins (sources/snapshot.py).
+* Writes per wave: ``seen``, ``fetch_log`` and ``excluded`` are appends of
+  the wave's own rows, but ``queued`` is still rewritten whole every wave
+  (survivors + discoveries), so a wave's write volume grows with the
+  frontier, not with the wave.
 * Per-wave work only ever ranks *queued* rows (window by host), and the
   global order/seq assignment runs on the per-wave SELECTION (≤ wave budget
   rows), never on the full frontier — no global sort of 10^10 rows.
 * ``discovered_seq`` for a discovery is ``(parent_seq+1)*2^20 + outlink_pos``:
   a deterministic total order identical to the reference's discovery
   numbering, assigned WITHOUT any global counter or row_number over big data.
-* The fetch join broadcasts the (small) wave selection against the (huge)
-  web-graph/payload table — one streaming scan, zero shuffle of the graph.
+* The fetch is ONE join: it broadcasts the (small) wave selection against
+  the (huge) web-graph/payload table — one streaming scan, zero shuffle of
+  the graph.  Selected urls missing from the graph (status 0) come from the
+  selection itself, through the keep-first window that guards against
+  duplicate graph rows, not from a second join.
+* Spark jobs per wave: every exchange, broadcast and cache build is a job
+  of its own under AQE, so the wave builds the robots-gated frontier once
+  (cached) and the selection once (checkpointed), reads snapshots without
+  schema-inference or listing jobs, and reads the wave's discoveries back
+  from the staged frontier.  One wave takes 19 jobs on the golden fixture
+  (tests/test_plans.py keeps that budget), down from 26.
 * Seen-set anti-join keys on ``(url_hash, url)`` — int64-first shuffle key,
   string equality guards against xxhash64 collisions at 10^10 scale.
 * Skew: one hot host (~30% of fixture pages) is handled by AQE skew-join +
@@ -587,6 +600,12 @@ class CrawlEngine:
     ) -> tuple[WaveStats, int]:
         spark = self.spark
         self._wave_caches: list[DataFrame] = []
+        # a wave's discoveries are told apart in the frontier by their
+        # wave_discovered (see the seen stage below), which holds only while
+        # waves advance
+        man = self.store.manifest("queued")
+        if man is not None and wave <= man["meta"]["wave"]:
+            raise ValueError(f"wave {wave} is already committed")
         # exact frontier size from manifest file stats — zero Spark jobs
         urls_in = self.store.row_count("queued") or 0
         queued = self.store.read(spark, "queued")
@@ -602,6 +621,9 @@ class CrawlEngine:
                 F.coalesce("crawl_delay", F.lit(1.0)).alias("crawl_delay"),
             )
         )
+        # the gated frontier feeds the selection, the survivors and the
+        # excluded write: cache it so robots is broadcast and paths parsed
+        # once per wave, not once per consumer
         q = (
             queued.join(rb, "host", "left")
             .withColumn("crawl_delay", F.coalesce("crawl_delay", F.lit(1.0)))
@@ -611,7 +633,9 @@ class CrawlEngine:
                 "is_excluded",
                 F.exists("disallow", lambda p: F.col("path").startswith(p)),
             )
+            .cache()
         )
+        self._wave_caches.append(q)
         excluded = q.filter("is_excluded").select("url", "url_hash", "host", "host_bucket")
         candidates = q.filter(~F.col("is_excluded"))
 
@@ -620,6 +644,9 @@ class CrawlEngine:
         # W2: global wave order (source_idx, discovered_seq), cap, seq assign.
         # Single-partition window — but only over ≤ wave_budget candidate rows
         # per host cap, never the full frontier (SURVEY.md §4 W2 design).
+        # The wave-sized selection is checkpointed, not cached: the fetch
+        # reads it twice, and each read of a cache that is not yet built
+        # starts its own build job, while a checkpoint is built once, here.
         wsel = Window.orderBy(self._source_idx(F.col("source")), "discovered_seq")
         sel = (
             sel.withColumn("wave_rank", F.row_number().over(wsel))
@@ -636,59 +663,58 @@ class CrawlEngine:
                 "url", "url_hash", "host", "host_bucket", "source", "priority",
                 "discovered_seq", "seq", "fetch_ts", "host_rank",
             )
-            .cache()
+            .localCheckpoint()
         )
 
-        # J2 fetch: broadcast the small selection, stream the huge graph once;
-        # hits is wave-sized — cache it so fetch_log AND discovery reuse it.
+        # J2 fetch: ONE join — broadcast the small selection, stream the huge
+        # graph once.  Selected urls the graph lacks are fetch errors
+        # (status 0): their selection rows join the inner-join hits in the
+        # keep-first window below instead of a second (anti-)join against
+        # the hits.  An outer join cannot do this: Spark broadcasts only the
+        # side an outer join does NOT preserve, so keeping every selected url
+        # would broadcast (or shuffle) the graph instead of the selection.
         # The graph contract is one row per canonical url; a duplicate row
         # would inflate fetch_log (and the manifest-stat metrics arithmetic
-        # below assumes |fetch_log| == |sel|), so guard with a deterministic
-        # keep-first on the WAVE-SIZED join output — an extra narrow stage
-        # inside an existing job, never a shuffle of the huge graph.
+        # below assumes |fetch_log| == |sel|), so the window keeps one row
+        # per url — a shuffle of the WAVE-SIZED join output, never of the
+        # huge graph.
         g = graph.select("url", "outlinks", "status", "image_id")
-        # prefer the SUCCESSFUL row when duplicate graph rows disagree on
-        # status (a bare desc(status) would keep 500/404 over 200 and drop
-        # the successful fetch's outlinks); remaining keys make the pick
-        # deterministic among equal-status rows
+        hits = g.join(F.broadcast(sel), "url", "inner").withColumn("_miss", F.lit(False))
+        misses = (
+            sel.withColumn("outlinks", F.lit(None).cast(g.schema["outlinks"].dataType))
+            .withColumn("status", F.lit(0).cast(g.schema["status"].dataType))
+            .withColumn("image_id", F.lit(None).cast(g.schema["image_id"].dataType))
+            .withColumn("_miss", F.lit(True))
+        )
+        # a graph row beats the miss row; among duplicate graph rows prefer
+        # the SUCCESSFUL one when they disagree on status (a bare
+        # desc(status) would keep 500/404 over 200 and drop the successful
+        # fetch's outlinks); remaining keys make the pick deterministic
+        # among equal-status rows
         wdup = Window.partitionBy("url").orderBy(
+            F.asc("_miss"),
             F.desc(F.col("status") == 200),
             F.desc("status"),
             F.asc_nulls_last("image_id"),
             F.asc(F.xxhash64(F.to_json(F.struct("outlinks")))),
         )
-        hits = (
-            g.join(F.broadcast(sel), "url", "inner")
+        fetched_rows = (
+            hits.unionByName(misses)
             .withColumn("_dup_rn", F.row_number().over(wdup))
             .filter(F.col("_dup_rn") == 1)
-            .drop("_dup_rn")
+            .drop("_dup_rn", "_miss")
             .cache()
         )
-        miss = sel.join(
-            F.broadcast(hits.select("url")), "url", "left_anti"
-        ).select(
-            "url", "url_hash", "host", "host_bucket", "source",
-            "seq", "fetch_ts",
-        ).withColumn("status", F.lit(0)).withColumn("image_id", F.lit(None).cast("string"))
-        fetch_log = (
-            hits.select(
-                "seq", "url", "url_hash", "host", "host_bucket", "source",
-                F.lit(wave).alias("wave"), "fetch_ts",
-                F.col("status").cast("int").alias("status"), "image_id",
-            )
-            .unionByName(
-                miss.select(
-                    "seq", "url", "url_hash", "host", "host_bucket", "source",
-                    F.lit(wave).alias("wave"), "fetch_ts",
-                    F.col("status").cast("int").alias("status"), "image_id",
-                )
-            )
+        fetch_log = fetched_rows.select(
+            "seq", "url", "url_hash", "host", "host_bucket", "source",
+            F.lit(wave).alias("wave"), "fetch_ts",
+            F.col("status").cast("int").alias("status"), "image_id",
         )
 
         # discovery: explode outlinks of successful fetches, canonicalize,
         # encode deterministic discovered_seq, within-wave keep-first dedup
         disc = (
-            hits.filter("status = 200")
+            fetched_rows.filter("status = 200")
             .select("seq", F.col("source").alias("parent_source"),
                     F.col("priority").alias("parent_priority"),
                     F.posexplode("outlinks").alias("pos", "link"))
@@ -729,7 +755,6 @@ class CrawlEngine:
                 "url", "url_hash", "host", "host_bucket", "source", "priority",
                 "discovered_seq", "wave_discovered",
             )
-            .cache()
         )
 
         # commits — ONE atomic transaction per wave (root-pointer swap):
@@ -746,18 +771,11 @@ class CrawlEngine:
         fetched = sum(f.get("rows", 0) for f in new_log if f["partition"].get("status") == "200")
         errors = sum(f.get("rows", 0) for f in new_log if f["partition"].get("status") != "200")
         next_seq = seq_offset + fetched + errors
-        seen_man = txn.stage(
-            new.select("url_hash", "url", "host_bucket", "discovered_seq"),
-            "seen", mode="append", partition_by=["host_bucket"],
-            meta={"wave": wave},
-        )
-        # urls_new from the staged file stats — no count job
-        urls_new = sum(
-            f.get("rows", 0) for f in seen_man["files"][-seen_man["new_files"]:]
-        ) if seen_man["new_files"] else 0
-        survivors = queued.join(sel.select("url_hash", "url"), ["url_hash", "url"], "left_anti")
-        survivors = survivors.join(
-            excluded.select("url_hash", "url"), ["url_hash", "url"], "left_anti"
+        # next frontier = gated candidates - selection + new: the excluded
+        # rows already left with the gate, so one anti-join remains, against
+        # the broadcast wave-sized selection keys
+        survivors = candidates.join(
+            F.broadcast(sel.select("url_hash", "url")), ["url_hash", "url"], "left_anti"
         )
         next_queued = survivors.select(
             "url", "url_hash", "host", "host_bucket", "source", "priority",
@@ -767,6 +785,23 @@ class CrawlEngine:
             next_queued, "queued", mode="overwrite", partition_by=["host_bucket"],
             meta={"wave": wave, "next_seq": next_seq},
         )
+        # this wave's discoveries are the staged frontier's rows discovered
+        # in it (no earlier wave can have enqueued a row for wave + 1): read
+        # them back from the staged files instead of caching `new`, whose
+        # cache would cost a build job of its own
+        staged = txn.read(spark, "queued")  # None: the frontier ran dry
+        urls_new = 0
+        if staged is not None:
+            staged_new = staged.filter(F.col("wave_discovered") == wave + 1)
+            seen_man = txn.stage(
+                staged_new.select("url_hash", "url", "host_bucket", "discovered_seq"),
+                "seen", mode="append", partition_by=["host_bucket"],
+                meta={"wave": wave},
+            )
+            # urls_new from the staged file stats — no count job
+            urls_new = sum(
+                f.get("rows", 0) for f in seen_man["files"][-seen_man["new_files"]:]
+            ) if seen_man["new_files"] else 0
         # excluded rows = queued - selected - survivors + new, from manifest
         # stats; only spend a write job on the excluded table when nonempty
         next_rows = sum(f.get("rows", 0) for f in queued_man["files"])
@@ -797,7 +832,7 @@ class CrawlEngine:
         if urls_new > 0:
             # bloom sidecar updates OUTSIDE the txn: it is self-healing (a
             # stale sidecar is detected by its stamp and rebuilt from seen)
-            self._update_sidecar(new, pre_stamp)
+            self._update_sidecar(staged_new, pre_stamp)
         # amortized maintenance: keep append-heavy tables' file counts bounded
         if self.store.file_count("seen") > self.compact_files:
             self.store.compact(spark, "seen", partition_by=["host_bucket"])
@@ -805,9 +840,9 @@ class CrawlEngine:
             self.store.compact(spark, "fetch_log", partition_by=["status"])
         if self.store.file_count("excluded") > self.compact_files:
             self.store.compact(spark, "excluded")
-        sel.unpersist()
-        hits.unpersist()
-        new.unpersist()
+        # (Spark's context cleaner frees the selection checkpoint once no
+        # Spark-driver object refers to it)
+        fetched_rows.unpersist()
         for c in self._wave_caches:
             c.unpersist()
         self._wave_caches = []

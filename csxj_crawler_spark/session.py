@@ -84,6 +84,14 @@ def get_spark(
         .config("spark.driver.memory", _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # snapshot reads pass Spark the manifest's explicit file list, which
+        # already is the listing: above 32 paths (the default) Spark stats
+        # them in a parallel listing job, one extra job per read of a table
+        # that has grown past 32 files between compactions.  Stat-ing a few
+        # thousand files in the Spark driver costs less than that job on
+        # local or HDFS storage; object stores with slow per-file stats may
+        # want less.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
     )
     local_dir = _default_local_dir()
     if local_dir:

@@ -12,7 +12,10 @@ no network), so this implements the Iceberg *design* from the public spec:
   BASELINE.json:14);
 * readers open a *specific snapshot* (default: latest) and can prune the
   file list by partition values **before** Spark ever lists anything
-  (manifest-level partition pruning, like Iceberg's manifest filtering).
+  (manifest-level partition pruning, like Iceberg's manifest filtering);
+* a manifest also records the table's Spark schema, so a read hands Spark
+  the schema instead of running a footer-inference job (Iceberg keeps the
+  schema in table metadata for the same reason).
 
 The reference kept a filesystem JSON "db" with per-provider/day/batch dirs
 (SURVEY.md §1.1 [M csxj/db/provider.py]); this layer is its columnar,
@@ -30,8 +33,47 @@ import uuid
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 _PART_RE = re.compile(r"([A-Za-z0-9_]+)=([^/]+)/")
+_INT_RE = re.compile(r"-?[0-9]+")
+
+
+def _written_schema(df: DataFrame, partition_by: list[str] | None) -> dict:
+    """The schema of the files ``df`` is written to, as parquet inference
+    returns it: data columns in frame order, then the partition columns in
+    directory order, nullable (as Spark reads any file schema; recording
+    that keeps the schemas of one table's commits comparable).
+    :func:`_read_schema` types the partition columns."""
+    parts = list(partition_by or [])
+    by_name = {f.name: f for f in df.schema.fields}
+    fields = [f for f in df.schema.fields if f.name not in parts]
+    fields += [by_name[p] for p in parts]
+    return StructType(
+        [StructField(f.name, f.dataType, True, f.metadata) for f in fields]
+    ).jsonValue()
+
+
+def _read_schema(schema: dict | None, files: list[dict]) -> StructType | None:
+    """Schema to hand ``spark.read`` for ``files``, or None to infer it.
+
+    Partition columns get the type Spark's partition inference gives their
+    values in ``files``; only all-int32 values are typed here (int), any
+    other partition value falls back to inference."""
+    if schema is None:
+        return None
+    parts = set(files[0]["partition"])
+    if any(set(f["partition"]) != parts for f in files):
+        return None
+    fields = []
+    for field in StructType.fromJson(schema).fields:
+        if field.name in parts:
+            values = {f["partition"][field.name] for f in files}
+            if not all(_INT_RE.fullmatch(v) and -(2**31) <= int(v) < 2**31 for v in values):
+                return None
+            field = StructField(field.name, IntegerType(), True, field.metadata)
+        fields.append(field)
+    return StructType(fields)
 
 
 class SnapshotStore:
@@ -52,7 +94,7 @@ class SnapshotStore:
         #: eviction would retain every historical version's full file list,
         #: O(waves × live_files) driver memory at the 10^5-10^6-file regime.
         #: Older versions (explicit time travel) re-resolve uncached.
-        self._live_cache: dict[str, tuple[int, list[dict]]] = {}
+        self._live_cache: dict[str, tuple[int, tuple[list[dict], dict | None]]] = {}
         os.makedirs(root, exist_ok=True)
 
     # -- paths --------------------------------------------------------------
@@ -237,6 +279,7 @@ class SnapshotStore:
             "files": files,
             "new_files": len(files),
             "meta": meta or {},
+            "schema": _written_schema(df, partition_by),
         }
         return man
 
@@ -314,14 +357,24 @@ class SnapshotStore:
         }
 
     def live_files(self, table: str, version: int | None = None) -> list[dict] | None:
-        """Resolve a snapshot's full live file list.
+        """Resolve a snapshot's full live file list (see :meth:`_resolve`)."""
+        resolved = self._resolve(table, version)
+        return None if resolved is None else resolved[0]
+
+    def _resolve(
+        self, table: str, version: int | None = None
+    ) -> tuple[list[dict], dict | None] | None:
+        """A snapshot's live file list and the schema its files share.
 
         Delta (append) manifests list only their new files; the chain of
         parents is walked back to the nearest base snapshot (an overwrite,
         a compaction, or a legacy full-list manifest) and accumulated in
-        commit order.  Only the newest resolved version per table is
-        memoized (manifests are immutable once published; older versions
-        are touched only by explicit time travel and re-resolve)."""
+        commit order.  The schema is the one every manifest of the chain
+        records, or None when one records none (a store written before
+        manifests carried schemas) or they disagree.  Only the newest
+        resolved version per table is memoized (manifests are immutable
+        once published; older versions are touched only by explicit time
+        travel and re-resolve)."""
         if version is None:
             version = self.current_version(table)
         if version is None:
@@ -343,9 +396,11 @@ class SnapshotStore:
                 files.extend(m["files"])
             else:
                 files = list(m["files"])
+        schemas = [m.get("schema") for m in chain]
+        schema = schemas[0] if all(x == schemas[0] for x in schemas) else None
         if cached is None or version >= cached[0]:
-            self._live_cache[table] = (version, files)
-        return files
+            self._live_cache[table] = (version, (files, schema))
+        return files, schema
 
     def partition_rows(
         self, table: str, key: str, version: int | None = None
@@ -413,9 +468,10 @@ class SnapshotStore:
         ``partition_filter={'host_bucket': {'3','7'}}`` reads only matching
         data files — pruning happens here at the manifest, before Spark.
         """
-        files = self.live_files(table, version)
-        if not files:
+        resolved = self._resolve(table, version)
+        if resolved is None:
             return None
+        files, schema = resolved
         if partition_filter:
             files = [
                 f
@@ -425,12 +481,20 @@ class SnapshotStore:
                     for k, vals in partition_filter.items()
                 )
             ]
+        return self._read_files(spark, table, files, schema)
+
+    def _read_files(
+        self, spark: SparkSession, table: str, files: list[dict], schema: dict | None
+    ) -> DataFrame | None:
         if not files:
             return None
-        return (
-            spark.read.option("basePath", self._tdir(table) + "/data")
-            .parquet(*[f["path"] for f in files])
-        )
+        reader = spark.read.option("basePath", self._tdir(table) + "/data")
+        # the manifest's schema spares Spark a footer-inference job per read;
+        # manifests without one (older stores) still infer
+        read_schema = _read_schema(schema, files)
+        if read_schema is not None:
+            reader = reader.schema(read_schema)
+        return reader.parquet(*[f["path"] for f in files])
 
     # -- metadata tables (Iceberg-style `#snapshots` / `#files`) -------------
     def snapshots_df(self, spark: SparkSession, table: str) -> DataFrame:
@@ -543,6 +607,16 @@ class Transaction:
         man = self.store._stage_rows(rows, schema, table, mode, meta)
         self._staged.append(man)
         return man
+
+    def read(self, spark: SparkSession, table: str) -> DataFrame | None:
+        """The rows this transaction staged into ``table`` (the whole new
+        snapshot for an overwrite, the appended rows for an append), still
+        invisible to every other reader.  Opening them runs no Spark job,
+        like :meth:`SnapshotStore.read`."""
+        man = next((m for m in self._staged if m["table"] == table), None)
+        if man is None:
+            raise ValueError(f"table {table!r} is not staged in this transaction")
+        return self.store._read_files(spark, table, man["files"], man.get("schema"))
 
     def commit(self, meta: dict | None = None) -> dict:
         tables = {m["table"]: m["version"] for m in self._staged}

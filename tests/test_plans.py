@@ -221,3 +221,79 @@ def test_band_cap_window_reuses_join_exchange(spark):
 
     band_exchanges = len(re.findall(r"Exchange hashpartitioning\(band_id", plan))
     assert band_exchanges == 2, plan
+
+
+#: Spark jobs of one CrawlEngine.step on the golden fixture (wave 0, seen
+#: sidecar off): the selection checkpoint takes 6 (robots broadcast, gated
+#: frontier cache, three window exchanges, the checkpoint), fetch_log 5
+#: (selection broadcast, keep-first exchange, fetch cache, write exchange,
+#: write), queued 5 (selection-keys broadcast, discovery exchange, seen
+#: broadcast, write exchange, write), seen 2 and excluded 1.
+WAVE_JOB_BUDGET = 19
+
+
+@pytest.fixture(scope="module")
+def one_wave(spark, fix_dir, tmp_path_factory):
+    """Run wave 0 once in its own job group; keep the plan of every table
+    the wave stages and the wave's job ids."""
+    import time
+
+    from csxj_crawler_spark.plans.crawl import CrawlEngine
+    from csxj_crawler_spark.sources.snapshot import SnapshotStore, Transaction
+
+    store = SnapshotStore(str(tmp_path_factory.mktemp("onewave")))
+    eng = CrawlEngine(spark, store, n_buckets=8)
+    eng.bootstrap(spark.read.parquet(f"{fix_dir}/seeds.parquet"))
+    graph = spark.read.parquet(f"{fix_dir}/web_graph.parquet")
+    robots = spark.read.parquet(f"{fix_dir}/robots.parquet")
+    plans: dict[str, str] = {}
+    stage = Transaction.stage
+
+    def spy(self, df, table, *args, **kwargs):
+        plans[table] = _plan(df)
+        return stage(self, df, table, *args, **kwargs)
+
+    sc = spark.sparkContext
+    Transaction.stage = spy
+    sc.setJobGroup("one-wave", "one CrawlEngine.step")
+    try:
+        eng.step(0, 0, graph, robots)
+    finally:
+        Transaction.stage = stage
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status store trails the scheduler: wait until the count settles
+    jobs: list[int] = []
+    for _ in range(20):
+        time.sleep(0.25)
+        now = list(sc.statusTracker().getJobIdsForGroup("one-wave"))
+        if now and now == jobs:
+            break
+        jobs = now
+    return plans, jobs
+
+
+def test_wave_job_budget(one_wave):
+    _plans, jobs = one_wave
+    assert 0 < len(jobs) <= WAVE_JOB_BUDGET, f"{len(jobs)} jobs in one wave"
+
+
+def test_fetch_is_one_broadcast_join(one_wave):
+    """The fetch streams the graph once through ONE broadcast hash join whose
+    build side is the wave selection; urls the graph lacks ride the
+    keep-first window, so no anti-join runs against the fetch output."""
+    plans, _jobs = one_wave
+    plan = plans["fetch_log"]
+    assert plan.count("BroadcastHashJoin") == 1, plan
+    for other in ("SortMergeJoin", "ShuffledHashJoin", "NestedLoopJoin", "LeftAnti"):
+        assert other not in plan, plan
+    assert plan.count("web_graph.parquet") == 1, plan
+    lines = plan.split("\n")
+    at = next(i for i, l in enumerate(lines) if "BroadcastExchange" in l)
+    depth = len(lines[at]) - len(lines[at].lstrip(" :+-"))
+    build = []
+    for line in lines[at + 1:]:
+        if len(line) - len(line.lstrip(" :+-")) <= depth:
+            break
+        build.append(line)
+    assert build and "web_graph" not in "\n".join(build), plan

@@ -4,8 +4,12 @@ an uninterrupted run."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
+from csxj_crawler_spark.fixtures import simulator
 from csxj_crawler_spark.plans.crawl import CrawlEngine
 from csxj_crawler_spark.sources.snapshot import SnapshotStore
 
@@ -104,3 +108,33 @@ def test_bloom_sidecar_survives_threshold_change_on_resume(
     theirs = ref.seen_set().select("url")
     assert ours.exceptAll(theirs).count() == 0
     assert theirs.exceptAll(ours).count() == 0
+
+
+def test_resume_store_without_schemas(spark, fix_dir, inputs, tmp_path_factory):
+    """A store whose manifests carry no schema (written before manifests
+    recorded one) resumes to the golden crawl order and seen set: its
+    tables read by inference, and new commits add schemas from then on."""
+    seeds, graph, robots = inputs
+    st = SnapshotStore(str(tmp_path_factory.mktemp("noschema")))
+    CrawlEngine(spark, st, n_buckets=8).run(seeds, graph, robots, max_waves=2)
+    stripped = 0
+    for table in st.list_tables():
+        for v in st.versions(table):
+            path = os.path.join(st._snap_dir(table), f"v{v}.json")
+            with open(path) as f:
+                man = json.load(f)
+            stripped += man.pop("schema", None) is not None
+            with open(path, "w") as f:
+                json.dump(man, f)
+    assert stripped > 0
+    resumed = CrawlEngine(spark, SnapshotStore(st.root), n_buckets=8)
+    resumed.run(seeds, graph, robots)
+
+    golden = simulator.simulate_dir(fix_dir)
+    want = [
+        (r["seq"], r["url"], r["wave"], r["status"], r["fetch_ts"])
+        for r in golden.crawl_order
+    ]
+    assert _order(resumed) == want
+    ours = sorted(r.url for r in resumed.seen_set().select("url").collect())
+    assert ours == sorted(golden.seen)

@@ -235,3 +235,59 @@ def test_live_cache_keeps_only_latest_version(spark, store):
     # time travel still works (uncached resolve) and does not evict latest
     assert store.read(spark, "t", version=1).count() == 9
     assert store._live_cache["t"][0] == v_latest
+
+
+def test_read_runs_no_job_and_matches_inference(spark, store):
+    """The manifest's schema replaces footer inference, and its file list
+    replaces Spark's listing: opening a many-file table runs zero jobs and
+    yields exactly what inference over the same files yields."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        [(i, f"u{i}", i % 16, (200, 404, 0)[i % 3], i / 7) for i in range(600)],
+        "id long, url string, host_bucket int, status int, score double",
+    ).withColumn("h", F.xxhash64("url"))  # non-nullable until written
+    store.commit(df, "t", mode="overwrite", partition_by=["host_bucket", "status"])
+    # an append of rows read back (all nullable) keeps one schema per table
+    store.commit(
+        store.read(spark, "t").limit(60), "t", mode="append",
+        partition_by=["host_bucket", "status"],
+    )
+    files = store.live_files("t")
+    assert len(files) > 32  # above Spark's parallel-listing threshold default
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-read", "snapshot read")
+    try:
+        got = store.read(spark, "t")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("snapshot-read")) == []
+    inferred = spark.read.option("basePath", store._tdir("t") + "/data").parquet(
+        *[f["path"] for f in files]
+    )
+    assert got.schema == inferred.schema
+    assert got.columns == ["id", "url", "score", "h", "host_bucket", "status"]
+    assert got.schema["host_bucket"].dataType.simpleString() == "int"
+    assert got.schema["status"].dataType.simpleString() == "int"
+    assert sorted(got.collect()) == sorted(inferred.collect())
+
+
+def test_manifest_without_schema_still_reads(spark, store):
+    """Stores written before manifests carried a schema read by inference."""
+    import json
+
+    store.commit(_df(spark, 0, 10), "t", mode="overwrite", partition_by=["host_bucket"])
+    store.commit(_df(spark, 10, 15), "t", mode="append", partition_by=["host_bucket"])
+    want = store.read(spark, "t")
+    for v in store.versions("t"):
+        path = os.path.join(store._snap_dir("t"), f"v{v}.json")
+        with open(path) as f:
+            man = json.load(f)
+        del man["schema"]
+        with open(path, "w") as f:
+            json.dump(man, f)
+    old = SnapshotStore(store.root)
+    got = old.read(spark, "t")
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
