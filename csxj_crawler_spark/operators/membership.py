@@ -14,9 +14,12 @@ All build/probe math is vectorized numpy over Arrow batches:
   hot host's bucket across ``salt`` uniformly-loaded tasks (hash-derived, so
   load is uniform by construction); each sub-filter covers exactly the keys
   that will probe it, at the same bits/key — no replication, no widening;
-* probe — cogrouped ``applyInPandas`` of candidates × their matching
-  sub-filter per (bucket, hash % salt) group (no driver collect, no blob
-  replication per row);
+* probe — ONE entry point, :func:`probe_maybe`, for both sidecar kinds; it
+  returns the FP-rate-sized ``(host_bucket, url_hash)`` maybe-set.  A bloom
+  sidecar small enough to broadcast is probed map-side in place; a larger
+  one, and every cuckoo sidecar, is cogrouped per (bucket, hash % salt)
+  with its one matching sub-filter (no driver collect, no blob
+  replication per row).  The kinds differ only in that per-group test;
 * merge — OR-reduce of per-commit blobs per (bucket, salt) (UDAF-style
   grouped map).
 
@@ -122,14 +125,6 @@ def bloom_probe_bits_multi(
     return ((words[w] >> b) & np.uint64(1)).all(axis=1)
 
 
-def bloom_m_for(n: int, bits_per_key: int = spec.BLOOM_BITS_PER_KEY) -> int:
-    """Power-of-two bit count a filter over ``n`` keys is sized to."""
-    m = 64
-    while m < n * bits_per_key:
-        m *= 2
-    return m
-
-
 def build_blooms(
     seen: DataFrame,
     hash_col: str = "url_hash",
@@ -199,198 +194,6 @@ def merge_blooms(blooms: DataFrame) -> DataFrame:
         )
 
     return blooms.groupBy("host_bucket", "salt").applyInPandas(_merge, BLOOM_SCHEMA)
-
-
-def bloom_prefilter(
-    candidates: DataFrame, blooms: DataFrame, salt: int = spec.BLOOM_SALT
-) -> DataFrame:
-    """D3: cogrouped probe — returns candidates with ``maybe_seen`` boolean.
-
-    Rows with ``maybe_seen = false`` are DEFINITELY new (bloom has no false
-    negatives) and can skip the exact anti-join; ``true`` rows continue to D1.
-    Cogrouping is per (host_bucket, hash%salt) against the matching
-    sub-filter — must use the salt the blooms were built with.
-    """
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
-    ) + ", maybe_seen boolean"
-    out_cols = [f.name for f in candidates.schema.fields] + ["maybe_seen"]
-
-    def _probe(cand: pd.DataFrame, blm: pd.DataFrame) -> pd.DataFrame:
-        cand = cand.drop(columns=["_psalt"])
-        if len(cand) == 0:
-            return cand.assign(maybe_seen=pd.Series([], dtype=bool))
-        if len(blm) == 0:
-            return cand.assign(maybe_seen=False)
-        words = np.frombuffer(blm["bloom"].iloc[0], dtype=np.uint64)
-        m = int(blm["m"].iloc[0])
-        k = int(blm["k"].iloc[0])
-        hit = bloom_probe_bits(cand["url_hash"].to_numpy(), words, m, k)
-        return cand.assign(maybe_seen=hit)
-
-    cand_s = candidates.withColumn(
-        "_psalt", F.pmod(F.col("url_hash"), F.lit(max(1, salt))).cast("int")
-    )
-    return (
-        cand_s.groupBy("host_bucket", "_psalt")
-        .cogroup(blooms.groupBy("host_bucket", "salt"))
-        .applyInPandas(_probe, out_schema)
-        .select(*out_cols)
-    )
-
-
-def bloom_probe_maybe(
-    candidates: DataFrame, blooms: DataFrame, salt: int = spec.BLOOM_SALT
-) -> DataFrame:
-    """D3, narrow form: returns only the ``(host_bucket, url_hash)`` rows the
-    bloom flags as 'maybe seen'.
-
-    The Arrow boundary carries 12 bytes/candidate in and almost nothing out
-    (the maybe-set is FP-rate sized), instead of full candidate rows both
-    ways — the difference between a bandwidth-bound probe and a compute-bound
-    one.  Callers re-attach the verdict with broadcast joins on the hash.
-    Each (bucket, hash%salt) candidate group meets exactly its sub-filter —
-    uniform task sizes under host skew, no blob replication."""
-
-    def _probe(cand: pd.DataFrame, blm: pd.DataFrame) -> pd.DataFrame:
-        if len(cand) == 0 or len(blm) == 0:
-            return pd.DataFrame(
-                {"host_bucket": pd.Series([], dtype="int32"),
-                 "url_hash": pd.Series([], dtype="int64")}
-            )
-        words = np.frombuffer(blm["bloom"].iloc[0], dtype=np.uint64)
-        hit = bloom_probe_bits(
-            cand["url_hash"].to_numpy(), words, int(blm["m"].iloc[0]), int(blm["k"].iloc[0])
-        )
-        return cand[hit][["host_bucket", "url_hash"]]
-
-    cand_s = candidates.select("host_bucket", "url_hash").withColumn(
-        "_psalt", F.pmod(F.col("url_hash"), F.lit(max(1, salt))).cast("int")
-    )
-    return (
-        cand_s.groupBy("host_bucket", "_psalt")
-        .cogroup(blooms.groupBy("host_bucket", "salt"))
-        .applyInPandas(_probe, "host_bucket int, url_hash long")
-    )
-
-
-def blooms_total_bytes(blooms: DataFrame) -> int:
-    """Total blob bytes of a bloom sidecar — a column-pruned metadata
-    aggregate (reads only the int ``m`` column, never the blobs)."""
-    row = blooms.select((F.sum("m") / 8).cast("long").alias("b")).collect()[0]
-    return int(row["b"] or 0)
-
-
-def _driver_mem_bytes(spark) -> int:
-    """Configured driver heap in bytes (the JVM the collect lands in)."""
-    raw = (spark.conf.get("spark.driver.memory", "1g") or "1g").strip().lower()
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    if raw[-1] in units:
-        return int(float(raw[:-1]) * units[raw[-1]])
-    return int(raw)  # plain bytes
-
-
-def bloom_probe_maybe_bcast(
-    candidates: DataFrame,
-    blooms: DataFrame,
-    salt: int = spec.BLOOM_SALT,
-    max_bytes: int | None = None,
-    known_total_bytes: int | None = None,
-) -> DataFrame:
-    """D3, broadcast form: same contract as :func:`bloom_probe_maybe` — the
-    FP-rate-sized ``(host_bucket, url_hash)`` maybe-set — but as a MAP-SIDE
-    probe: the whole sidecar ships to executors once and every scan task
-    probes its own batches in place.
-
-    Scale strategy (mirrors how engines pick broadcast vs shuffle joins):
-
-    * sidecar fits executor memory (``blooms_total_bytes`` ≤ caller's
-      threshold, e.g. 10 bits/key over ≤ ~10^8-10^9 seen keys) → THIS path:
-      zero candidate shuffle, no cogroup sort, the probe pipelines with the
-      frontier scan — at 10^10 candidate rows the avoided shuffle is
-      ~10^10 × 12 B;
-    * beyond it → the cogrouped :func:`bloom_probe_maybe`, which never
-      replicates blobs (each sub-filter meets exactly its candidate group).
-
-    All sub-filters are concatenated into ONE flat uint64 array with per-
-    (bucket, salt) offsets, so a mixed-group batch probes in one vectorized
-    gather (:func:`bloom_probe_bits_multi`) — no per-group Python loop.
-
-    Driver-memory guard: the collect materializes the blobs plus the
-    concatenated array plus the broadcast copy (~3× the sidecar) in the
-    DRIVER heap, so a sidecar above ``max_bytes`` (default: 1/8 of
-    ``spark.driver.memory``) falls back to the cogrouped shuffle probe
-    instead of OOMing the driver — same contract, never collects.
-    """
-    spark = candidates.sparkSession
-    if max_bytes is None:
-        max_bytes = _driver_mem_bytes(spark) // 8
-    total = (
-        known_total_bytes
-        if known_total_bytes is not None
-        else blooms_total_bytes(blooms)
-    )
-    if total > max_bytes:
-        return bloom_probe_maybe(candidates, blooms, salt=salt)
-    rows = blooms.select("host_bucket", "salt", "n", "m", "k", "bloom").collect()
-    if not rows:
-        return spark.createDataFrame([], "host_bucket int, url_hash long")
-    k = int(rows[0]["k"])
-    n_b = max(int(r["host_bucket"]) for r in rows) + 1
-    n_groups = n_b * salt
-    off = np.zeros(n_groups, dtype=np.uint64)
-    m_arr = np.zeros(n_groups, dtype=np.uint64)  # m == 0 → no sub-filter
-    parts: list[np.ndarray] = []
-    cursor = 0
-    for r in rows:
-        gid = int(r["host_bucket"]) * salt + int(r["salt"])
-        w = np.frombuffer(r["bloom"], dtype=np.uint64)
-        off[gid] = cursor
-        m_arr[gid] = int(r["m"])
-        parts.append(w)
-        cursor += len(w)
-    words = np.concatenate(parts) if parts else np.zeros(0, dtype=np.uint64)
-    bc = spark.sparkContext.broadcast((words, off, m_arr, k, salt, n_b))
-
-    def _probe(batches):
-        w_b, off_b, m_b, k_b, salt_b, nb_b = bc.value
-        for pdf in batches:
-            h = pdf["url_hash"].to_numpy()
-            bucket = pdf["host_bucket"].to_numpy()
-            gid = bucket.astype(np.int64) * salt_b + (h % salt_b)
-            ok = (bucket >= 0) & (bucket < nb_b)
-            gid = np.where(ok, gid, 0)
-            m_row = m_b[gid]
-            present = ok & (m_row > 0)
-            hit = np.zeros(len(h), dtype=bool)
-            if present.any():
-                idx = np.flatnonzero(present)
-                hit[idx] = bloom_probe_bits_multi(
-                    h[idx], w_b, off_b[gid[idx]], m_b[gid[idx]], k_b
-                )
-            yield pdf[hit]
-
-    return candidates.select("host_bucket", "url_hash").mapInPandas(
-        _probe, "host_bucket int, url_hash long"
-    )
-
-
-def bloom_probe_maybe_auto(
-    candidates: DataFrame,
-    blooms: DataFrame,
-    salt: int = spec.BLOOM_SALT,
-    bcast_max_bytes: int = spec.BLOOM_BCAST_MAX_BYTES,
-) -> DataFrame:
-    """D3 strategy pick: broadcast map-side probe while the sidecar fits
-    executor memory (and driver headroom — the bcast path re-checks its own
-    guard without re-running the metadata aggregate), cogrouped shuffle
-    probe beyond it."""
-    total = blooms_total_bytes(blooms)
-    if total <= bcast_max_bytes:
-        return bloom_probe_maybe_bcast(
-            candidates, blooms, salt=salt, known_total_bytes=total
-        )
-    return bloom_probe_maybe(candidates, blooms, salt=salt)
 
 
 # ---------------------------------------------------------------------------
@@ -590,34 +393,6 @@ def build_cuckoos(
     return sub.groupBy("host_bucket", "_csalt").applyInPandas(_build, CUCKOO_SCHEMA)
 
 
-def cuckoo_probe_maybe(
-    candidates: DataFrame, cuckoos: DataFrame, salt: int = spec.BLOOM_SALT
-) -> DataFrame:
-    """Narrow 'maybe seen' probe — the exact contract of
-    :func:`bloom_probe_maybe` (cuckoo filters false-positive at the
-    fingerprint-collision rate, never false-negative for inserted keys), so
-    the engine's ``_dedup_new`` plan is sidecar-kind agnostic."""
-
-    def _probe(cand: pd.DataFrame, tbl: pd.DataFrame) -> pd.DataFrame:
-        if len(cand) == 0 or len(tbl) == 0:
-            return pd.DataFrame(
-                {"host_bucket": pd.Series([], dtype="int32"),
-                 "url_hash": pd.Series([], dtype="int64")}
-            )
-        cf = CuckooFilter.from_bytes(tbl["table"].iloc[0])
-        hit = cf.contains_many(cand["url_hash"].to_numpy())
-        return cand[hit][["host_bucket", "url_hash"]]
-
-    cand_s = candidates.select("host_bucket", "url_hash").withColumn(
-        "_psalt", F.pmod(F.col("url_hash"), F.lit(max(1, salt))).cast("int")
-    )
-    return (
-        cand_s.groupBy("host_bucket", "_psalt")
-        .cogroup(cuckoos.groupBy("host_bucket", "salt"))
-        .applyInPandas(_probe, "host_bucket int, url_hash long")
-    )
-
-
 def cuckoo_update(
     cuckoos: DataFrame,
     adds: DataFrame | None = None,
@@ -698,4 +473,141 @@ def cuckoo_update(
         delta_s.groupBy("host_bucket", "_dsalt")
         .cogroup(cuckoos.groupBy("host_bucket", "salt"))
         .applyInPandas(_update, out_schema)
+    )
+
+
+# ---------------------------------------------------------------------------
+# Probe (D3): one entry point for both sidecar kinds
+# ---------------------------------------------------------------------------
+
+_MAYBE_SCHEMA = "host_bucket int, url_hash long"
+
+
+def probe_maybe(
+    candidates: DataFrame, sidecar: DataFrame, salt: int = spec.BLOOM_SALT
+) -> DataFrame:
+    """D3: the ``(host_bucket, url_hash)`` candidate rows the sidecar flags
+    as 'maybe seen'.  Rows outside this set are DEFINITELY new (neither
+    filter kind false-negatives); rows inside it go on to the exact
+    anti-join (D1).  The kind comes from the sidecar's own columns:
+    ``bloom`` (:func:`build_blooms`) or ``table`` (:func:`build_cuckoos`).
+    ``salt`` must be the salt the sidecar was built with.
+
+    The Arrow boundary carries 12 bytes/candidate in and an FP-rate-sized
+    set out; callers re-attach the verdict with broadcast joins on the hash.
+
+    Strategy (one size read, like a broadcast-vs-shuffle join pick):
+
+    * a bloom sidecar of at most ``min(spec.BLOOM_BCAST_MAX_BYTES, driver
+      heap / 8)`` bytes → map-side probe: the whole sidecar ships to
+      executors once and every scan task probes its own batches in place —
+      zero candidate shuffle, no cogroup sort.  The driver bound is a
+      memory guard: the collect holds the blobs, their concatenation and
+      the broadcast copy (~3× the sidecar) in the DRIVER heap;
+    * a larger bloom sidecar, and every cuckoo sidecar → cogroup of each
+      (bucket, hash%salt) candidate group with exactly its sub-filter — no
+      driver collect, no blob replication, uniform tasks under host skew.
+    """
+    if "bloom" not in sidecar.columns:
+        return _cogroup_probe(candidates, sidecar, salt, _cuckoo_hits)
+    total = sidecar.select((F.sum("m") / 8).cast("long")).collect()[0][0] or 0
+    limit = min(
+        spec.BLOOM_BCAST_MAX_BYTES, _driver_mem_bytes(candidates.sparkSession) // 8
+    )
+    if total > limit:
+        return _cogroup_probe(candidates, sidecar, salt, _bloom_hits)
+    return _bloom_bcast_probe(candidates, sidecar, salt)
+
+
+def _bloom_hits(hashes: np.ndarray, sub: pd.Series) -> np.ndarray:
+    words = np.frombuffer(sub["bloom"], dtype=np.uint64)
+    return bloom_probe_bits(hashes, words, int(sub["m"]), int(sub["k"]))
+
+
+def _cuckoo_hits(hashes: np.ndarray, sub: pd.Series) -> np.ndarray:
+    return CuckooFilter.from_bytes(sub["table"]).contains_many(hashes)
+
+
+def _cogroup_probe(
+    candidates: DataFrame, sidecar: DataFrame, salt: int, hits
+) -> DataFrame:
+    """Cogroup each (bucket, hash%salt) candidate group with its one
+    sub-filter row; ``hits(hashes, sub_filter_row)`` is the kind's test."""
+
+    def _probe(cand: pd.DataFrame, sub: pd.DataFrame) -> pd.DataFrame:
+        if len(cand) == 0 or len(sub) == 0:
+            return pd.DataFrame(
+                {"host_bucket": pd.Series([], dtype="int32"),
+                 "url_hash": pd.Series([], dtype="int64")}
+            )
+        hit = hits(cand["url_hash"].to_numpy(), sub.iloc[0])
+        return cand[hit][["host_bucket", "url_hash"]]
+
+    cand_s = candidates.select("host_bucket", "url_hash").withColumn(
+        "_psalt", F.pmod(F.col("url_hash"), F.lit(max(1, salt))).cast("int")
+    )
+    return (
+        cand_s.groupBy("host_bucket", "_psalt")
+        .cogroup(sidecar.groupBy("host_bucket", "salt"))
+        .applyInPandas(_probe, _MAYBE_SCHEMA)
+    )
+
+
+def _driver_mem_bytes(spark) -> int:
+    """Configured driver heap in bytes (the JVM the collect lands in)."""
+    raw = (spark.conf.get("spark.driver.memory", "1g") or "1g").strip().lower()
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    if raw[-1] in units:
+        return int(float(raw[:-1]) * units[raw[-1]])
+    return int(raw)  # plain bytes
+
+
+def _bloom_bcast_probe(
+    candidates: DataFrame, blooms: DataFrame, salt: int
+) -> DataFrame:
+    """Map-side probe against the collected, broadcast bloom sidecar.  All
+    sub-filters are concatenated into ONE flat uint64 array with per-
+    (bucket, salt) offsets, so a mixed-group batch probes in one vectorized
+    gather (:func:`bloom_probe_bits_multi`) — no per-group Python loop."""
+    spark = candidates.sparkSession
+    rows = blooms.select("host_bucket", "salt", "n", "m", "k", "bloom").collect()
+    if not rows:
+        return spark.createDataFrame([], _MAYBE_SCHEMA)
+    k = int(rows[0]["k"])
+    n_b = max(int(r["host_bucket"]) for r in rows) + 1
+    n_groups = n_b * salt
+    off = np.zeros(n_groups, dtype=np.uint64)
+    m_arr = np.zeros(n_groups, dtype=np.uint64)  # m == 0 → no sub-filter
+    parts: list[np.ndarray] = []
+    cursor = 0
+    for r in rows:
+        gid = int(r["host_bucket"]) * salt + int(r["salt"])
+        w = np.frombuffer(r["bloom"], dtype=np.uint64)
+        off[gid] = cursor
+        m_arr[gid] = int(r["m"])
+        parts.append(w)
+        cursor += len(w)
+    words = np.concatenate(parts) if parts else np.zeros(0, dtype=np.uint64)
+    bc = spark.sparkContext.broadcast((words, off, m_arr, k, salt, n_b))
+
+    def _probe(batches):
+        w_b, off_b, m_b, k_b, salt_b, nb_b = bc.value
+        for pdf in batches:
+            h = pdf["url_hash"].to_numpy()
+            bucket = pdf["host_bucket"].to_numpy()
+            gid = bucket.astype(np.int64) * salt_b + (h % salt_b)
+            ok = (bucket >= 0) & (bucket < nb_b)
+            gid = np.where(ok, gid, 0)
+            m_row = m_b[gid]
+            present = ok & (m_row > 0)
+            hit = np.zeros(len(h), dtype=bool)
+            if present.any():
+                idx = np.flatnonzero(present)
+                hit[idx] = bloom_probe_bits_multi(
+                    h[idx], w_b, off_b[gid[idx]], m_b[gid[idx]], k_b
+                )
+            yield pdf[hit]
+
+    return candidates.select("host_bucket", "url_hash").mapInPandas(
+        _probe, _MAYBE_SCHEMA
     )

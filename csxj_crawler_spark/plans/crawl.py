@@ -89,9 +89,7 @@ class CrawlEngine:
         store: SnapshotStore,
         n_buckets: int = spec.DEFAULT_HOST_BUCKETS,
         wave_budget: int = spec.WAVE_URL_BUDGET,
-        use_pandas_canon: bool = False,
-        use_bloom: bool = True,
-        seen_filter: str | None = None,
+        seen_filter: str = "bloom",
         salt: int = spec.DEFAULT_SALT,
         bloom_min_seen: int = spec.BLOOM_MIN_SEEN,
         priority_decay: float | None = spec.DEFAULT_PRIORITY_DECAY,
@@ -100,21 +98,16 @@ class CrawlEngine:
         self.store = store
         self.n_buckets = n_buckets
         self.wave_budget = wave_budget
-        self.use_pandas_canon = use_pandas_canon
         #: sidecar-backed seen set (D2-D5): per-(bucket, salt) filter blobs
         #: prefilter discoveries so the exact anti-join only sees 'maybe
         #: seen' rows.  ``seen_filter`` picks the kind — "bloom" (default:
         #: smallest blobs, O(delta) merge, but retraction = full rebuild) or
         #: "cuckoo" (the north_star's FALLBACK: ~4x the bytes, but frontier
         #: retractions delete fingerprints in O(delta) instead of re-reading
-        #: the whole seen table) or "none".  ``use_bloom=False`` maps to
-        #: "none" for backward compatibility.
-        if seen_filter is None:
-            seen_filter = "bloom" if use_bloom else "none"
+        #: the whole seen table) or "none".
         if seen_filter not in ("bloom", "cuckoo", "none"):
             raise ValueError(f"seen_filter must be bloom|cuckoo|none: {seen_filter}")
         self.seen_filter = seen_filter
-        self.use_bloom = seen_filter != "none"
         #: below this many seen rows the bloom sidecar is pure overhead (the
         #: exact anti-join broadcasts the small seen side anyway; measured
         #: ~25% slower bloom-ON at bench scale) — auto-disable under it.
@@ -130,11 +123,6 @@ class CrawlEngine:
         self.compact_files = max(64, 4 * n_buckets)
 
     # -- helpers -------------------------------------------------------------
-    def _canon(self, col):
-        if self.use_pandas_canon:
-            return U.canonicalize_udf(col)
-        return U.canonicalize_expr(col)
-
     def _source_idx(self, col):
         expr = F.lit(len(spec.SOURCE_ORDER))
         for s, i in reversed(list(spec.SOURCE_IDX.items())):
@@ -146,17 +134,30 @@ class CrawlEngine:
         df = df.withColumn("host", U.host_of(F.col("url")))
         return df.withColumn("host_bucket", U.host_bucket(F.col("host"), self.n_buckets))
 
-    # -- bloom-backed seen set (D1-D4) ---------------------------------------
+    def _seed_frontier(self, seeds: DataFrame) -> DataFrame:
+        """Seed rows canonicalized, one per url (its lowest ``seed_rank``),
+        with the frontier key columns."""
+        s = seeds.select(
+            U.canonicalize_expr(F.col("url")).alias("url"),
+            "source",
+            "priority",
+            "seed_rank",
+        )
+        w = Window.partitionBy("url").orderBy("seed_rank")
+        s = s.withColumn("rn", F.row_number().over(w)).filter("rn = 1").drop("rn")
+        return self._frontier_cols(s)
+
+    # -- sidecar-backed seen set (D1-D5) -------------------------------------
     def _dedup_new(self, disc: DataFrame) -> DataFrame:
         """Discoveries not yet in the seen set — the D1 exact dedup with the
-        D3 bloom prefilter in front.
+        D3 sidecar prefilter in front.
 
         Plan shape chosen for a 10^10-row seen table:
 
-        * the bloom probe (per-``host_bucket`` blobs, cogrouped Arrow batch)
-          marks definite-new rows WITHOUT touching the seen table — blooms
-          have no false negatives, so only 'maybe seen' rows need the exact
-          check;
+        * the sidecar probe (per-(bucket, salt) bloom or cuckoo blobs)
+          marks definite-new rows WITHOUT touching the seen table — neither
+          kind has false negatives, so only 'maybe seen' rows need the
+          exact check;
         * the exact check never shuffles seen: a left-semi join streams the
           (bucket-pruned) seen scan against the broadcast 'maybe' set to
           find true matches, then the anti-join is against that tiny match
@@ -164,7 +165,7 @@ class CrawlEngine:
           10^10-row side of a plain left_anti.
         """
         keys = ["url_hash", "url"]
-        sidecar = self._sidecar() if self.use_bloom else None
+        sidecar = self._sidecar()
         if sidecar is None:
             seen = self.store.read(self.spark, "seen")
             if seen is None:
@@ -177,11 +178,7 @@ class CrawlEngine:
         # hash) is in the maybe-set: a superset of the true matches only by
         # hash collisions, still FP-rate sized, and the (hash, url) anti-
         # join below keeps exactness either way.
-        maybe_h = (
-            M.bloom_probe_maybe_auto(disc, sidecar, salt=spec.BLOOM_SALT)
-            if self.seen_filter == "bloom"
-            else M.cuckoo_probe_maybe(disc, sidecar, salt=spec.BLOOM_SALT)
-        ).cache()
+        maybe_h = M.probe_maybe(disc, sidecar, salt=spec.BLOOM_SALT).cache()
         self._wave_caches.append(maybe_h)
         seen = self.store.read(self.spark, "seen")
         matches = seen.join(
@@ -192,10 +189,11 @@ class CrawlEngine:
         return disc.join(F.broadcast(matches), keys, "left_anti")
 
     def _seen_stamp(self) -> dict:
-        """Identity of the current seen snapshot for bloom validity: content
-        id (stable across compactions, changed by any append/overwrite) plus
-        the row count.  Row count alone would accept a same-sized REWRITE of
-        seen with different contents — a false-negative hole."""
+        """Identity of the current seen snapshot for sidecar validity:
+        content id (stable across compactions, changed by any append/
+        overwrite) plus the row count.  Row count alone would accept a
+        same-sized REWRITE of seen with different contents — a
+        false-negative hole."""
         man = self.store.manifest("seen")
         return {
             "seen_rows": self.store.row_count("seen") or 0,
@@ -207,85 +205,90 @@ class CrawlEngine:
     def _sidecar_table(self) -> str:
         return "blooms" if self.seen_filter == "bloom" else "cuckoos"
 
-    def _sidecar(self) -> DataFrame | None:
-        """Current sidecar blobs (bloom or cuckoo), or None when absent/
-        stale/below-threshold.
+    def _sidecar_covers(self, stamp: dict) -> bool:
+        """Validity invariant: a sidecar commit is stamped with the seen
+        snapshot's (content_id, row count, salt); a stamp equal to the one of
+        a seen snapshot ⇒ the blobs cover exactly its rows ⇒ no false
+        negatives (compaction preserves content_id, so it does not
+        invalidate)."""
+        man = self.store.manifest(self._sidecar_table)
+        return man is not None and all(
+            man["meta"].get(k) == v for k, v in stamp.items()
+        )
 
-        Validity invariant: a sidecar commit is stamped with the seen
-        snapshot's (content_id, row count); both matching ⇒ the blobs cover
-        exactly the live seen rows ⇒ no false negatives (compaction
-        preserves content_id, so it does not invalidate)."""
-        seen_rows = self.store.row_count("seen") or 0
-        if seen_rows < self.bloom_min_seen:
+    def _rebuild_sidecar(self, stamp: dict) -> None:
+        """Full build from the seen table, committed under ``stamp``: one
+        sub-filter per (host_bucket, hash%salt), each sized to its own key
+        count — uniform tasks under host skew."""
+        build = M.build_cuckoos if self.seen_filter == "cuckoo" else M.build_blooms
+        self.store.commit(
+            build(self.store.read(self.spark, "seen"), salt=spec.BLOOM_SALT),
+            self._sidecar_table, mode="overwrite", meta=stamp,
+        )
+
+    def _sidecar_on(self) -> bool:
+        return (
+            self.seen_filter != "none"
+            and (self.store.row_count("seen") or 0) >= self.bloom_min_seen
+        )
+
+    def _sidecar(self) -> DataFrame | None:
+        """Current sidecar blobs (bloom or cuckoo), rebuilt first when
+        stale; None when the filter is off, below its threshold or there is
+        no seen table yet."""
+        if not self._sidecar_on():
             return None
         stamp = self._seen_stamp()
-        tbl = self._sidecar_table
-        man = self.store.manifest(tbl)
-        if man is not None and all(
-            man["meta"].get(k) == v for k, v in stamp.items()
-        ):
-            return self.store.read(self.spark, tbl)
-        seen = self.store.read(self.spark, "seen")
-        if seen is None:
-            return None
-        self.store.commit(
-            self._full_sidecar_build(seen), tbl, mode="overwrite", meta=stamp
-        )
-        return self.store.read(self.spark, tbl)
+        if not self._sidecar_covers(stamp):
+            if self.store.read(self.spark, "seen") is None:
+                return None
+            self._rebuild_sidecar(stamp)
+        return self.store.read(self.spark, self._sidecar_table)
 
-    def _full_sidecar_build(self, seen: DataFrame) -> DataFrame:
-        """Full build: one sub-filter per (host_bucket, hash%salt), each
-        sized to its own key count — uniform tasks under host skew."""
-        if self.seen_filter == "cuckoo":
-            return M.build_cuckoos(seen, salt=spec.BLOOM_SALT)
-        return M.build_blooms(seen, salt=spec.BLOOM_SALT)
-
-    def _update_sidecar(self, new: DataFrame, pre_stamp: dict | None = None) -> None:
-        """Fold the just-committed discoveries into the per-bucket blobs (D4)
-        and stamp the covered seen snapshot.
-
-        Delta filters are built AT THE MERGED FILTER'S m per bucket, so the
-        merge is a plain equal-width OR — never tiling a dense delta-sized
-        array across the whole filter (which saturates bit density toward 1
-        after a few waves).  When a bucket's key count would overflow its
-        current m (n·bits_per_key > m), the whole sidecar is rebuilt from
-        seen at the right size — amortized-doubling cost, like compaction.
+    def _update_sidecar(self, new: DataFrame, pre_stamp: dict) -> None:
+        """Fold the just-committed discoveries into the per-(bucket, salt)
+        sub-filters (D4/D5) and stamp the covered seen snapshot.
 
         ``pre_stamp`` (the seen stamp captured BEFORE this wave's commit) is
-        the validity gate for the delta merge: the prev sidecar is only
-        merged into if its own stamp matches — i.e. it covered exactly the
-        pre-commit seen snapshot.  Any mismatch (a sidecar written below a
-        different bloom_min_seen threshold, a divergent content chain, a
-        changed salt) falls back to a full rebuild — merging a stale sidecar
-        with only the last wave's delta would re-stamp it as valid while
-        missing earlier rows: false negatives, re-crawled duplicates."""
-        if not self.use_bloom:
-            return
-        seen_rows = self.store.row_count("seen") or 0
-        if seen_rows < self.bloom_min_seen:
+        the validity gate: the prev sidecar is only updated if it covered
+        exactly the pre-commit seen snapshot.  Any mismatch (a sidecar
+        written below a different bloom_min_seen threshold, a divergent
+        content chain, a changed salt) falls back to a full rebuild —
+        updating a stale sidecar with only the last wave's delta would
+        re-stamp it as valid while missing earlier rows: false negatives,
+        re-crawled duplicates.
+
+        Fit check, from the tiny (bucket, salt, n, size) metadata and the
+        wave-sized delta counts: a bloom sub-filter takes the delta while
+        (n + c)·bits_per_key ≤ m; a cuckoo sub-filter while n + c ≤ 95% of
+        its ACTUAL slot count (4-slot tables insert reliably below that;
+        ``M.cuckoo_slots`` is the constructor's own sizing).  A group that
+        would not fit rebuilds the whole sidecar at the right size —
+        amortized-doubling cost, like compaction.
+
+        Bloom deltas are built AT THE MERGED SUB-FILTER'S m, so the merge is
+        a plain equal-width OR — never tiling a dense delta-sized array
+        across the whole filter (which saturates bit density toward 1 after
+        a few waves).  Cuckoo deltas insert in place; a failed insert
+        (``ok = false``) also rebuilds — never a silent false negative."""
+        if not self._sidecar_on():
             return
         stamp = self._seen_stamp()
         tbl = self._sidecar_table
-        prev_man = self.store.manifest(tbl)
-        prev = self.store.read(self.spark, tbl)
-        if prev is not None and pre_stamp is not None:
-            if any(prev_man["meta"].get(k) != v for k, v in pre_stamp.items()):
-                prev = None  # stale/foreign sidecar: full rebuild below
+        prev = (
+            self.store.read(self.spark, tbl)
+            if self._sidecar_covers(pre_stamp) else None
+        )
         if prev is None:
-            # first crossing of the threshold: size to the full seen set
-            self.store.commit(
-                self._full_sidecar_build(self.store.read(self.spark, "seen")),
-                tbl, mode="overwrite", meta=stamp,
-            )
+            self._rebuild_sidecar(stamp)
             return
-        if self.seen_filter == "cuckoo":
-            self._cuckoo_delta(prev, new, stamp)
-            return
-        # tiny driver-side metadata reads: (bucket, salt, n, m) without
+        bloom = self.seen_filter == "bloom"
+        size_col = "m" if bloom else "capacity"
+        # tiny driver-side metadata reads: (bucket, salt, n, size) without
         # blobs, and per-sub-filter delta counts of the wave-sized `new`
-        prev_nm = {
-            (r["host_bucket"], r["salt"]): (int(r["n"]), int(r["m"]))
-            for r in prev.select("host_bucket", "salt", "n", "m").collect()
+        prev_ns = {
+            (r["host_bucket"], r["salt"]): (int(r["n"]), int(r[size_col]))
+            for r in prev.select("host_bucket", "salt", "n", size_col).collect()
         }
         delta_n = {
             (r["host_bucket"], r["salt"]): int(r["cnt"])
@@ -298,72 +301,32 @@ class CrawlEngine:
             .agg(F.count("*").alias("cnt"))
             .collect()
         }
-        overflow = any(
-            key in prev_nm
-            and (prev_nm[key][0] + c) * spec.BLOOM_BITS_PER_KEY > prev_nm[key][1]
-            for key, c in delta_n.items()
-        )
-        if overflow:
-            self.store.commit(
-                self._full_sidecar_build(self.store.read(self.spark, "seen")),
-                "blooms", mode="overwrite", meta=stamp,
-            )
-            return
-        # delta sub-filters floored at the merged sub-filter's m (keys new
-        # to the sidecar size to their own delta count — first blob, no
-        # tiling on merge)
-        mins = {key: m for key, (_n, m) in prev_nm.items()}
-        delta = M.build_blooms(new, min_m_by_key=mins, salt=spec.BLOOM_SALT)
-        merged = M.merge_blooms(delta.unionByName(prev.select(*delta.columns)))
-        self.store.commit(merged, "blooms", mode="overwrite", meta=stamp)
 
-    def _cuckoo_delta(self, prev: DataFrame, new: DataFrame, stamp: dict) -> None:
-        """O(delta) cuckoo sidecar maintenance: occupancy pre-check from the
-        tiny (bucket, salt, n, capacity) metadata + wave-sized delta counts
-        (the same driver-side arithmetic as the bloom overflow check), then
-        an in-place cogrouped insert.  Any group that would outgrow its
-        capacity — or reports a failed insert (``ok = false``) — falls back
-        to a full rebuild from seen; never a silent false negative."""
-        prev_nc = {
-            (r["host_bucket"], r["salt"]): (int(r["n"]), int(r["capacity"]))
-            for r in prev.select("host_bucket", "salt", "n", "capacity").collect()
-        }
-        delta_n = {
-            (r["host_bucket"], r["salt"]): int(r["cnt"])
-            for r in new.groupBy(
-                "host_bucket",
-                F.pmod(F.col("url_hash"), F.lit(spec.BLOOM_SALT))
-                .cast("int")
-                .alias("salt"),
-            )
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        }
-        # fill to ~95% of the ACTUAL slot count at most (4-slot cuckoo tables
-        # insert reliably below that); beyond → rebuild with fresh 2x
-        # headroom.  M.cuckoo_slots is the same sizing the CuckooFilter
-        # constructor uses, so this precheck cannot diverge from the real
-        # table; the ok=false rebuild fallback below stays the hard guarantee.
-        overflow = any(
-            key in prev_nc
-            and (prev_nc[key][0] + c) > 0.95 * M.cuckoo_slots(prev_nc[key][1])
+        def fits(n: int, size: int) -> bool:
+            if bloom:
+                return n * spec.BLOOM_BITS_PER_KEY <= size
+            return n <= 0.95 * M.cuckoo_slots(size)
+
+        if not all(
+            fits(prev_ns[key][0] + c, prev_ns[key][1])
             for key, c in delta_n.items()
-        )
-        if overflow:
-            self.store.commit(
-                self._full_sidecar_build(self.store.read(self.spark, "seen")),
-                "cuckoos", mode="overwrite", meta=stamp,
-            )
+            if key in prev_ns
+        ):
+            self._rebuild_sidecar(stamp)
+            return
+        if bloom:
+            # keys new to the sidecar size to their own delta count (first
+            # blob, no tiling on merge)
+            mins = {key: size for key, (_n, size) in prev_ns.items()}
+            delta = M.build_blooms(new, min_m_by_key=mins, salt=spec.BLOOM_SALT)
+            merged = M.merge_blooms(delta.unionByName(prev.select(*delta.columns)))
+            self.store.commit(merged, tbl, mode="overwrite", meta=stamp)
             return
         upd = M.cuckoo_update(prev, adds=new, salt=spec.BLOOM_SALT).cache()
-        bad = upd.filter(~F.col("ok")).limit(1).count() > 0
-        if bad:
-            self.store.commit(
-                self._full_sidecar_build(self.store.read(self.spark, "seen")),
-                "cuckoos", mode="overwrite", meta=stamp,
-            )
+        if upd.filter(~F.col("ok")).limit(1).count() > 0:
+            self._rebuild_sidecar(stamp)
         else:
-            self.store.commit(upd.drop("ok"), "cuckoos", mode="overwrite", meta=stamp)
+            self.store.commit(upd.drop("ok"), tbl, mode="overwrite", meta=stamp)
         upd.unpersist()
 
     def retract(self, urls: DataFrame) -> int:
@@ -385,7 +348,7 @@ class CrawlEngine:
             return 0
         r = (
             self._frontier_cols(
-                urls.select(self._canon(F.col("url")).alias("url"))
+                urls.select(U.canonicalize_expr(F.col("url")).alias("url"))
             )
             .select("url", "url_hash", "host_bucket")
             .dropDuplicates(["url_hash", "url"])
@@ -440,15 +403,15 @@ class CrawlEngine:
         )
         txn.commit(meta=dict(man_q["meta"], retracted=True))
         if dels is not None:
-            stamp = self._seen_stamp()  # post-retraction snapshot identity
-            prev_man = self.store.manifest("cuckoos")
-            prev = self.store.read(self.spark, "cuckoos")
-            if prev is not None and all(
-                prev_man["meta"].get(k) == v for k, v in pre_stamp.items()
-            ):
+            prev = (
+                self.store.read(self.spark, "cuckoos")
+                if self._sidecar_covers(pre_stamp) else None
+            )
+            if prev is not None:
                 upd = M.cuckoo_update(prev, dels=dels, salt=spec.BLOOM_SALT)
                 self.store.commit(
-                    upd.drop("ok"), "cuckoos", mode="overwrite", meta=stamp
+                    upd.drop("ok"), "cuckoos", mode="overwrite",
+                    meta=self._seen_stamp(),  # post-retraction identity
                 )
             # else: stale/absent sidecar — next _sidecar() rebuilds from seen
             dels.unpersist()
@@ -459,25 +422,15 @@ class CrawlEngine:
     # -- bootstrap (wave-0 frontier from the shared seed list) ---------------
     def bootstrap(self, seeds: DataFrame) -> None:
         """Canonicalize seeds, dedup keeping lowest seed_rank, commit v0."""
-        s = seeds.select(
-            self._canon(F.col("url")).alias("url"),
+        q = self._seed_frontier(seeds).select(
+            "url",
             "source",
             "priority",
-            "seed_rank",
-        )
-        w = Window.partitionBy("url").orderBy("seed_rank")
-        s = (
-            s.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        q = self._frontier_cols(
-            s.select(
-                "url",
-                "source",
-                "priority",
-                F.col("seed_rank").cast("long").alias("discovered_seq"),
-            ).withColumn("wave_discovered", F.lit(0))
+            F.col("seed_rank").cast("long").alias("discovered_seq"),
+            F.lit(0).alias("wave_discovered"),
+            "url_hash",
+            "host",
+            "host_bucket",
         )
         txn = self.store.transaction()
         txn.stage(
@@ -512,16 +465,7 @@ class CrawlEngine:
             return self.store.row_count("queued") or 0
         next_seq = man["meta"]["next_seq"]
         wave = man["meta"]["wave"] + 1
-        s = seeds.select(
-            self._canon(F.col("url")).alias("url"),
-            "source",
-            "priority",
-            "seed_rank",
-        )
-        w = Window.partitionBy("url").orderBy("seed_rank")
-        s = s.withColumn("rn", F.row_number().over(w)).filter("rn = 1").drop("rn")
-        s = self._frontier_cols(s)
-        disc = s.withColumn(
+        disc = self._seed_frontier(seeds).withColumn(
             "discovered_seq",
             (F.lit(next_seq).cast("long") + 1) * F.lit(1 << _POS_BITS).cast("long")
             + F.lit(self._INJECT_POS)
@@ -720,7 +664,7 @@ class CrawlEngine:
                     F.posexplode("outlinks").alias("pos", "link"))
             .select(
                 "seq", "parent_source", "parent_priority", "pos",
-                self._canon(F.col("link.url")).alias("url"),
+                U.canonicalize_expr(F.col("link.url")).alias("url"),
             )
             .withColumn(
                 "enc_seq",
@@ -821,7 +765,7 @@ class CrawlEngine:
             mode="append",
             meta={"wave": wave},
         )
-        # stamp of the seen snapshot the current bloom sidecar should cover
+        # stamp of the seen snapshot the current sidecar should cover
         # (current_version is still pre-wave: stage() publishes nothing) —
         # _update_sidecar validates the prev sidecar against it, so a sidecar
         # from a diverged history (e.g. a store reopened with a different
@@ -830,7 +774,7 @@ class CrawlEngine:
         pre_stamp = self._seen_stamp()
         txn.commit(meta={"wave": wave, "next_seq": next_seq})
         if urls_new > 0:
-            # bloom sidecar updates OUTSIDE the txn: it is self-healing (a
+            # sidecar updates OUTSIDE the txn: it is self-healing (a
             # stale sidecar is detected by its stamp and rebuilt from seen)
             self._update_sidecar(staged_new, pre_stamp)
         # amortized maintenance: keep append-heavy tables' file counts bounded

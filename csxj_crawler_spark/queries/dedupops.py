@@ -270,7 +270,7 @@ def q_dedup_clusters(spark, sf_dir) -> DataFrame:
 
 def q_membership_cuckoo(spark, sf_dir) -> DataFrame:
     """D5 — the engine's WIRED cuckoo sidecar path (``seen_filter="cuckoo"``:
-    build_cuckoos → cuckoo_update(dels=retraction batch) → cuckoo_probe_maybe,
+    build_cuckoos → cuckoo_update(dels=retraction batch) → probe_maybe,
     the exact operators CrawlEngine.retract/_dedup_new call): build a
     per-(bucket, salt) sidecar over the even half of document fingerprints,
     DELETE the multiples of 4 (a retraction), probe everything, and return
@@ -291,7 +291,7 @@ def q_membership_cuckoo(spark, sf_dir) -> DataFrame:
     sidecar = M.build_cuckoos(evens)
     dels = evens.filter(F.pmod(F.col("url_hash"), F.lit(4)) == 0)
     upd = M.cuckoo_update(sidecar, dels=dels).drop("ok")
-    maybe = M.cuckoo_probe_maybe(d, upd)
+    maybe = M.probe_maybe(d, upd)
     return (
         d.join(maybe, ["host_bucket", "url_hash"], "left_anti")
         .select("doc_id")

@@ -357,15 +357,13 @@ def run_one(cores: int) -> dict:
             blooms.count()
             stage_t["bloom_build"] = round(time.time() - t0, 2)
         cands = c.filter(F.pmod(F.col("cand_seq"), F.lit(2)) == 1)
-        # probe via the engine's auto strategy (the folded _dedup_new plan):
+        # probe via the engine's entry point (the folded _dedup_new plan):
         # the 24M-key sidecar (~60 MB) is far under BLOOM_BCAST_MAX_BYTES, so
         # this is the broadcast MAP-SIDE probe — the sidecar ships to
         # executors once and probing pipelines with the candidate scan; no
         # candidate shuffle, no cogroup sort.  (The >threshold cogroup path
         # stays exact-verified by the operator parity tests.)
-        maybe_h = M.bloom_probe_maybe_auto(
-            cands, blooms, salt=spec.BLOOM_SALT
-        ).cache()
+        maybe_h = M.probe_maybe(cands, blooms, salt=spec.BLOOM_SALT).cache()
         if stage_t is not None:
             maybe_h.count()
             stage_t["bloom_probe"] = round(time.time() - t0, 2)

@@ -32,11 +32,10 @@ def main() -> None:
     p.add_argument("--max-waves", type=int, default=50)
     p.add_argument("--wave-budget", type=int, default=2000)
     p.add_argument("--write-tasks", type=int, default=None)
-    p.add_argument("--no-bloom", action="store_true")
     p.add_argument(
-        "--seen-filter", choices=["bloom", "cuckoo", "none"], default=None,
+        "--seen-filter", choices=["bloom", "cuckoo", "none"], default="bloom",
         help="seen-set sidecar kind; cuckoo supports O(delta) retraction "
-        "(see --retract).  Default: bloom (none with --no-bloom).",
+        "(see --retract), none turns the filter off.  Default: bloom.",
     )
     p.add_argument(
         "--retract", default=None, metavar="PARQUET",
@@ -55,7 +54,7 @@ def main() -> None:
     store = SnapshotStore(args.store, write_tasks=args.write_tasks)
     eng = CrawlEngine(
         spark, store, n_buckets=args.buckets, wave_budget=args.wave_budget,
-        use_bloom=not args.no_bloom, seen_filter=args.seen_filter,
+        seen_filter=args.seen_filter,
     )
     seeds = spark.read.parquet(f"{args.fixture}/seeds.parquet")
     graph = spark.read.parquet(f"{args.fixture}/web_graph.parquet")

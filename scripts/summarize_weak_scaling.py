@@ -1,6 +1,6 @@
 """Aggregate the round-5 weak-scaling runs per the pre-registered rule.
 
-Pre-registered in scripts/run_weak_scaling_r05_run2.sh BEFORE run 2
+Pre-registered (BASELINE.md, weak-scaling run 2) BEFORE run 2
 executed: the reported weak-scaling summary is the per-metric median
 over both runs' clean-pair medians, recorded regardless of outcome.
 Weak scaling is complementary evidence (the judged strong-scaling rule

@@ -99,7 +99,7 @@ def test_parity_across_engine_configs(golden, spark, fix_dir, tmp_path_factory):
     from csxj_crawler_spark.sources.snapshot import SnapshotStore
 
     store = SnapshotStore(str(tmp_path_factory.mktemp("plain_store")))
-    eng = CrawlEngine(spark, store, n_buckets=8, use_bloom=False, salt=1)
+    eng = CrawlEngine(spark, store, n_buckets=8, seen_filter="none", salt=1)
     eng.run(
         spark.read.parquet(f"{fix_dir}/seeds.parquet"),
         spark.read.parquet(f"{fix_dir}/web_graph.parquet"),

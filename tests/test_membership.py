@@ -11,6 +11,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from csxj_crawler_spark import spec
 from csxj_crawler_spark.operators import membership as M
 
 i64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
@@ -79,22 +80,46 @@ def seen_df(spark):
     return spark.createDataFrame(rows, "host_bucket int, url_hash long")
 
 
-def test_spark_bloom_build_probe(spark, seen_df):
-    blooms = M.build_blooms(seen_df)
+def _maybe_set(df) -> set:
+    return {(r.host_bucket, r.url_hash) for r in df.collect()}
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _check_build_probe(spark, build, seen, cand):
+    """``build`` over ``seen`` rows; probing ``cand`` must flag every seen
+    row (no false negatives) and few of the others (FP-rate sized)."""
+    sidecar = build(spark.createDataFrame(seen, "host_bucket int, url_hash long"))
     # one sub-filter per (bucket, hash%salt) group present in the data
-    assert blooms.select("host_bucket").distinct().count() == 8
-    assert blooms.count() > 8
-    cand_rows = [(int(h) % 8, int(h)) for h in range(0, 4000)]
-    cand = spark.createDataFrame(cand_rows, "host_bucket int, url_hash long")
-    probed = M.bloom_prefilter(cand, blooms)
-    got = {(r.url_hash, r.maybe_seen) for r in probed.collect()}
-    # every truly-seen hash MUST be flagged maybe_seen (no false negatives)
-    for h, flag in got:
-        if h % 3 == 0:
-            assert flag, f"false negative for seen hash {h}"
-    # and the filter must be useful: most unseen hashes pass through
-    unseen_flags = [flag for h, flag in got if h % 3 != 0]
-    assert sum(unseen_flags) / len(unseen_flags) < 0.05
+    assert sidecar.select("host_bucket").distinct().count() == 8
+    assert sidecar.count() > 8
+    maybe = _maybe_set(
+        M.probe_maybe(spark.createDataFrame(cand, "host_bucket int, url_hash long"), sidecar)
+    )
+    missing = set(seen) - maybe
+    assert not missing, f"false negatives for seen keys {sorted(missing)[:5]}"
+    unseen = set(cand) - set(seen)
+    assert len(maybe & unseen) / len(unseen) < 0.05
+
+
+def test_spark_bloom_build_probe(spark):
+    seen = [(h % 8, h) for h in range(0, 4000, 3)]
+    cand = [(h % 8, h) for h in range(0, 4000)]
+    _check_build_probe(spark, M.build_blooms, seen, cand)
+
+
+def test_spark_cuckoo_build_probe(spark):
+    """The same contract through the same entry point for the cuckoo kind.
+    Its keys are random 64-bit hashes with buckets drawn apart from them,
+    like xxhash64 url hashes and host buckets: a cuckoo fingerprint is
+    bits 40-55 of the key, which small integer keys all share."""
+    rng = np.random.RandomState(3)
+    h = rng.randint(-(2**63), 2**63 - 1, size=4000, dtype=np.int64)
+    b = rng.randint(0, 8, size=4000)
+    cand = [(int(x), int(y)) for x, y in zip(b, h)]
+    _check_build_probe(spark, M.build_cuckoos, cand[::3], cand)
 
 
 def test_spark_bloom_merge(spark, seen_df):
@@ -141,12 +166,12 @@ def test_sized_delta_merge_does_not_saturate():
     assert M.bloom_probe_bits(base, words, m, 7).all()
 
 
-def test_sub_filter_fanout_no_false_negatives_any_salt(spark, seen_df):
+def test_sub_filter_fanout_no_false_negatives_any_salt(spark, seen_df, monkeypatch):
     """The (bucket, hash%salt) sub-filter fan-out preserves the bloom
-    contract at every fan-out width: the maybe-set covers ALL seen keys (no
-    false negatives) and stays FP-rate sized.  Build salt and probe salt
-    are one parameter — each candidate group meets exactly the sub-filter
-    that holds its keys."""
+    contract at every fan-out width, on both probe paths: the maybe-set
+    covers ALL seen keys (no false negatives) and stays FP-rate sized.
+    Build salt and probe salt are one parameter — each candidate group
+    meets exactly the sub-filter that holds its keys."""
     cand = spark.createDataFrame(
         [(int(h) % 8, int(h)) for h in range(0, 6000)], "host_bucket int, url_hash long"
     )
@@ -154,27 +179,28 @@ def test_sub_filter_fanout_no_false_negatives_any_salt(spark, seen_df):
     sizes = {}
     for salt in (1, 8, 16):
         blooms = M.build_blooms(seen_df, salt=salt)
-        got = {
-            (r.host_bucket, r.url_hash)
-            for r in M.bloom_probe_maybe(cand, blooms, salt=salt).collect()
-        }
-        assert seen_keys <= got, f"false negatives at salt={salt}"
-        # FP-rate sized: non-seen probes rarely flagged
-        fp = len(got - seen_keys) / (6000 - len(seen_keys))
-        assert fp < 0.05, (salt, fp)
+        for bcast_max in (spec.BLOOM_BCAST_MAX_BYTES, -1):  # broadcast, cogroup
+            with monkeypatch.context() as mp:
+                mp.setattr(spec, "BLOOM_BCAST_MAX_BYTES", bcast_max)
+                got = _maybe_set(M.probe_maybe(cand, blooms, salt=salt))
+            assert seen_keys <= got, f"false negatives at salt={salt}"
+            # FP-rate sized: non-seen probes rarely flagged
+            fp = len(got - seen_keys) / (6000 - len(seen_keys))
+            assert fp < 0.05, (salt, fp)
         sizes[salt] = blooms.agg(F.sum(F.length("bloom"))).collect()[0][0]
     # total blob bytes comparable across fan-outs (pow2 rounding aside):
     # sub-filters are sized to their own keys, not replicated
     assert sizes[16] <= 4 * sizes[1], sizes
 
 
-def test_probe_empty_bloom_marks_all_new(spark):
+def test_probe_empty_bloom_marks_all_new(spark, monkeypatch):
+    """An empty sidecar flags nothing on the cogroup path, for both kinds
+    (the broadcast path: test_bloom_probe_bcast_empty_sidecar)."""
+    monkeypatch.setattr(spec, "BLOOM_BCAST_MAX_BYTES", -1)
     cand = spark.createDataFrame([(0, 1), (1, 2)], "host_bucket int, url_hash long")
-    blooms = M.build_blooms(
-        spark.createDataFrame([], "host_bucket int, url_hash long")
-    )
-    out = M.bloom_prefilter(cand, blooms).collect()
-    assert all(not r.maybe_seen for r in out)
+    empty = spark.createDataFrame([], "host_bucket int, url_hash long")
+    for sidecar in (M.build_blooms(empty), M.build_cuckoos(empty)):
+        assert M.probe_maybe(cand, sidecar).count() == 0
 
 
 def test_bloom_probe_bits_multi_matches_single():
@@ -197,11 +223,10 @@ def test_bloom_probe_bits_multi_matches_single():
     assert np.array_equal(got, want)
 
 
-def test_bloom_probe_bcast_parity_with_cogroup(spark):
+def test_bloom_probe_bcast_parity_with_cogroup(spark, monkeypatch):
     """Broadcast (map-side) probe returns EXACTLY the cogrouped probe's
     maybe-set — including negative hashes, where numpy's floored % must
-    match Spark's pmod — and the auto strategy is result-identical on both
-    sides of its size threshold."""
+    match Spark's pmod — on either side of the size threshold."""
     rng = np.random.RandomState(23)
     seen_h = rng.randint(-(2**62), 2**62, size=3000).astype(np.int64)
     seen_rows = [(int(h) % 8, int(h)) for h in seen_h]
@@ -211,26 +236,22 @@ def test_bloom_probe_bcast_parity_with_cogroup(spark):
         [(int(h) % 8, int(h)) for h in cand_h], "host_bucket int, url_hash long"
     )
     blooms = M.build_blooms(seen).cache()
-    want = {(r.host_bucket, r.url_hash) for r in M.bloom_probe_maybe(cand, blooms).collect()}
-    got = {(r.host_bucket, r.url_hash) for r in M.bloom_probe_maybe_bcast(cand, blooms).collect()}
+    bcast = M.probe_maybe(cand, blooms)
+    assert "FlatMapCoGroupsInPandas" not in _plan(bcast)
+    got = _maybe_set(bcast)
+    monkeypatch.setattr(spec, "BLOOM_BCAST_MAX_BYTES", 0)
+    cogroup = M.probe_maybe(cand, blooms)
+    assert "FlatMapCoGroupsInPandas" in _plan(cogroup)
+    want = _maybe_set(cogroup)
     assert got == want
-    seen_keys = {(int(h) % 8, int(h)) for h in seen_h}
     assert {(int(h) % 8, int(h)) for h in seen_h[::2]} <= got  # no false negatives
-    auto_small = {
-        (r.host_bucket, r.url_hash)
-        for r in M.bloom_probe_maybe_auto(cand, blooms, bcast_max_bytes=0).collect()
-    }
-    auto_big = {
-        (r.host_bucket, r.url_hash)
-        for r in M.bloom_probe_maybe_auto(cand, blooms, bcast_max_bytes=1 << 30).collect()
-    }
-    assert auto_small == want and auto_big == want
 
 
-def test_bloom_probe_bcast_driver_guard_falls_back(spark):
-    """An oversized sidecar must NOT be collected to the driver: the bcast
-    entry point's driver-memory guard (r4) silently degrades to the cogrouped
-    shuffle probe — same maybe-set, a FlatMapCoGroupsInPandas plan, and no
+def test_bloom_probe_bcast_driver_guard_falls_back(spark, monkeypatch):
+    """A sidecar over either size bound must NOT be collected to the driver:
+    above ``spec.BLOOM_BCAST_MAX_BYTES`` or above the driver-memory guard
+    (1/8 of the driver heap) the probe degrades to the cogrouped shuffle
+    probe — same maybe-set, a FlatMapCoGroupsInPandas plan, and no
     broadcast/collect of the blobs."""
     rng = np.random.RandomState(5)
     seen_h = rng.randint(-(2**62), 2**62, size=500).astype(np.int64)
@@ -241,19 +262,31 @@ def test_bloom_probe_bcast_driver_guard_falls_back(spark):
         [(int(h) % 4, int(h)) for h in seen_h[::3]], "host_bucket int, url_hash long"
     )
     blooms = M.build_blooms(seen).cache()
-    want = {(r.host_bucket, r.url_hash) for r in M.bloom_probe_maybe(cand, blooms).collect()}
-    guarded = M.bloom_probe_maybe_bcast(cand, blooms, max_bytes=1)
-    plan = guarded._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan  # cogroup path, no collect
-    assert {(r.host_bucket, r.url_hash) for r in guarded.collect()} == want
+    want = _maybe_set(M.probe_maybe(cand, blooms))
     # default guard derives from spark.driver.memory and is permissive here
     assert M._driver_mem_bytes(spark) >= (1 << 30)
+
+    def no_collect(*_a, **_kw):
+        raise AssertionError("oversized sidecar collected to the driver")
+
+    monkeypatch.setattr(M, "_bloom_bcast_probe", no_collect)
+    for bound in ("executor", "driver"):
+        with monkeypatch.context() as mp:
+            if bound == "executor":
+                mp.setattr(spec, "BLOOM_BCAST_MAX_BYTES", 1)
+            else:
+                mp.setattr(M, "_driver_mem_bytes", lambda _spark: 8)
+            guarded = M.probe_maybe(cand, blooms)
+            assert "FlatMapCoGroupsInPandas" in _plan(guarded), bound
+            assert _maybe_set(guarded) == want, bound
 
 
 def test_bloom_probe_bcast_empty_sidecar(spark):
     cand = spark.createDataFrame([(0, 1), (1, 2)], "host_bucket int, url_hash long")
     blooms = M.build_blooms(spark.createDataFrame([], "host_bucket int, url_hash long"))
-    assert M.bloom_probe_maybe_bcast(cand, blooms).count() == 0
+    probe = M.probe_maybe(cand, blooms)
+    assert "FlatMapCoGroupsInPandas" not in _plan(probe)
+    assert probe.count() == 0
 
 
 @settings(max_examples=25, deadline=None)
@@ -303,3 +336,113 @@ def test_cuckoo_probe_equals_multiset_semantics(keys, data):
     got = cf.contains_many(parr)
     want = np.array([counts.get(key_of(int(h)), 0) > 0 for h in probes])
     assert (got == want).all()
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_sidecar_maintenance_outcomes(spark, tmp_path, monkeypatch, kind):
+    """CrawlEngine's one sidecar-maintenance path, driven through
+    ``inject_seeds`` on a small store, takes each of its outcomes: a stale
+    stamp rebuilds, a delta that fits is merged (bloom) or inserted in place
+    (cuckoo), a delta that overflows a sub-filter rebuilds, and a cuckoo
+    insert reporting ``ok = false`` rebuilds.  After every outcome the
+    sidecar's stamp is the live seen snapshot's and every live seen row
+    probes as maybe-seen."""
+    from csxj_crawler_spark.plans.crawl import CrawlEngine
+    from csxj_crawler_spark.sources.snapshot import SnapshotStore
+
+    calls: list[str] = []
+
+    def spy(name, label):
+        orig = getattr(M, name)
+
+        def wrapped(*a, **kw):
+            calls.append(label(kw))
+            return orig(*a, **kw)
+
+        monkeypatch.setattr(M, name, wrapped)
+
+    spy("build_blooms", lambda kw: "full" if kw.get("min_m_by_key") is None else "delta")
+    spy("build_cuckoos", lambda kw: "full")
+    spy("merge_blooms", lambda kw: "merge")
+    spy("cuckoo_update", lambda kw: "update")
+
+    store = SnapshotStore(str(tmp_path / "store"))
+    eng = CrawlEngine(spark, store, n_buckets=1, seen_filter=kind, bloom_min_seen=0)
+    table = "blooms" if kind == "bloom" else "cuckoos"
+    pool = iter(f"http://lesoir-{i % 7}.example/a/{i}" for i in range(100_000))
+    rank = iter(range(100_000))
+
+    def seeds(urls):
+        return spark.createDataFrame(
+            [(u, "lesoir", 1.0, next(rank)) for u in urls],
+            "url string, source string, priority double, seed_rank int",
+        )
+
+    def fresh_by_group(n):
+        """``n`` unused urls, grouped by the (bucket, salt) sub-filter their
+        keys land in."""
+        urls = [next(pool) for _ in range(n)]
+        rows = eng._seed_frontier(seeds(urls)).select(
+            "url", "host_bucket",
+            F.pmod("url_hash", F.lit(spec.BLOOM_SALT)).cast("int").alias("salt"),
+        ).collect()
+        groups: dict = {}
+        for r in rows:
+            groups.setdefault((r.host_bucket, r.salt), []).append(r.url)
+        return groups
+
+    def sub_filters():
+        size = "m" if kind == "bloom" else "capacity"
+        return {
+            (r.host_bucket, r.salt): (r.n, r[size])
+            for r in store.read(spark, table).collect()
+        }
+
+    def room(n, size):  # delta keys a sub-filter still takes (the fit check)
+        if kind == "bloom":
+            return size // spec.BLOOM_BITS_PER_KEY - n
+        return int(0.95 * M.cuckoo_slots(size)) - n
+
+    def inject(urls, expect):
+        calls.clear()
+        assert eng.inject_seeds(seeds(urls)) == len(urls)
+        assert calls == expect
+        stamp = eng._seen_stamp()
+        assert {k: store.manifest(table)["meta"].get(k) for k in stamp} == stamp
+        seen = store.read(spark, "seen")
+        assert M.probe_maybe(seen, store.read(spark, table)).count() == seen.count()
+
+    eng.bootstrap(seeds([next(pool) for _ in range(40)]))
+    # the threshold is read on every wave; each inject adds one seen row
+    eng.bloom_min_seen = 41
+    inject([next(pool)], ["full"])  # seen crosses the threshold: first build
+    eng.bloom_min_seen = 10**9
+    calls.clear()
+    eng.inject_seeds(seeds([next(pool)]))  # seen moves on without the sidecar
+    assert calls == []
+    eng.bloom_min_seen = 43
+    inject([next(pool)], ["full"])  # the kept sidecar's stamp is stale
+    eng.bloom_min_seen = 0
+
+    # a delta that fits every sub-filter it touches
+    subs = sub_filters()
+    fits = [
+        urls[0] for g, urls in fresh_by_group(64).items()
+        if g not in subs or room(*subs[g]) >= 1
+    ]
+    inject(fits[:1], ["delta", "merge"] if kind == "bloom" else ["update"])
+
+    # a delta that overflows one sub-filter
+    g, (n, size) = next(iter(sub_filters().items()))
+    need = room(n, size) + 1
+    fresh = fresh_by_group(need * spec.BLOOM_SALT * 2)
+    assert len(fresh[g]) >= need
+    inject(fresh[g][:need], ["full"])
+
+    if kind == "cuckoo":  # a failed in-place insert (ok = false) rebuilds
+        update = M.cuckoo_update
+        monkeypatch.setattr(
+            M, "cuckoo_update",
+            lambda *a, **kw: update(*a, **kw).withColumn("ok", F.lit(False)),
+        )
+        inject([next(pool)], ["update", "full"])

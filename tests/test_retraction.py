@@ -75,7 +75,7 @@ def test_cuckoo_sidecar_is_wired_and_updated(spark, retraction_runs):
     assert man["meta"]["seen_rows"] == (store.row_count("seen") or 0)
     cuckoos = store.read(spark, "cuckoos")
     seen = store.read(spark, "seen")
-    probe = M.cuckoo_probe_maybe(seen, cuckoos)
+    probe = M.probe_maybe(seen, cuckoos)
     # every live seen row must probe 'maybe present' — zero false negatives
     assert probe.count() == seen.count()
 
