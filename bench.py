@@ -16,9 +16,8 @@ per-query median; the raw trial lists ship in the JSON so a reader can see
 the ambient variance instead of guessing.  The crawl and payload rows get
 the same median-of-N treatment (fresh store per crawl trial).
 
-Scaling-efficiency evidence (N vs 4N cores) lives in scripts/scaling_bench.py
-(two JVMs can't share one bench process); its results are recorded in
-BASELINE.md, not in this JSON.
+The closed N→4N scaling-efficiency record is in BASELINE.md, not in this
+JSON.
 """
 
 from __future__ import annotations

@@ -525,9 +525,7 @@ class CrawlEngine:
         if self.salt > 1:
             per_salt = Window.partitionBy("host", "salt").orderBy(*order)
             candidates = (
-                candidates.withColumn(
-                    "salt", F.pmod(F.xxhash64("url"), F.lit(self.salt)).cast("int")
-                )
+                candidates.withColumn("salt", U.url_salt(F.col("url"), self.salt))
                 .withColumn("salt_rank", F.row_number().over(per_salt))
                 .filter(F.col("salt_rank") <= budget_c)
                 .drop("salt", "salt_rank")

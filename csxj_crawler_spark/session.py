@@ -32,25 +32,6 @@ def _default_driver_mem() -> str:
     return "8g"
 
 
-def _default_local_dir() -> str | None:
-    """Shuffle/spill scratch.  The LIBRARY default is Spark's own (disk):
-    shuffle spill happens precisely under memory pressure, and tmpfs (capped
-    at ~50% of RAM) turns a large spill into ENOSPC/OOM where disk-backed
-    spill survives — so /dev/shm must never be a silent engine-wide default.
-    Benchmarks opt in explicitly (scaling_bench/bench pass spark.local.dir or
-    set SPARK_GRAFT_LOCAL_DIR) because on a ONE-BOX measurement the OS disk
-    is a fixed-throughput resource that distorts core-scaling ratios, while
-    real clusters scale local NVMe with node count."""
-    env = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if env:
-        return env
-    if os.environ.get("SPARK_GRAFT_TMPFS_SCRATCH", "0") == "1" and os.path.isdir(
-        "/dev/shm"
-    ):
-        return "/dev/shm/csxj-spark-local"
-    return None
-
-
 def get_spark(
     app: str = "csxj-crawler-spark",
     master: str | None = None,
@@ -93,7 +74,12 @@ def get_spark(
         # want less.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
     )
-    local_dir = _default_local_dir()
+    # Shuffle/spill scratch defaults to Spark's own (disk): spill happens
+    # under memory pressure, and tmpfs (capped at ~50% of RAM) turns a large
+    # spill into ENOSPC/OOM where disk-backed spill survives, so /dev/shm is
+    # never a silent default.  A deployment sets SPARK_GRAFT_LOCAL_DIR;
+    # benchmarks pass their own spark.local.dir through ``extra``.
+    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir:
         b = b.config("spark.local.dir", local_dir)
     for k, v in (extra or {}).items():
