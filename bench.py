@@ -1,6 +1,6 @@
 """Per-round benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS], plus crawl-engine and payload-path
-throughput on deterministic bench fixtures.
+sf0.1) on local[$SPARK_GRAFT_CPUS] (default: every core), plus crawl-engine
+and payload-path throughput on deterministic bench fixtures.
 
 Prints ONE JSON line, the last line on stdout:
   {"metric": ..., "value": <total sec>, "unit": "sec",
@@ -36,7 +36,7 @@ from csxj_crawler_spark.session import get_spark
 from csxj_crawler_spark.sources.snapshot import SnapshotStore
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
 
 CRAWL_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "60000"))
 CRAWL_WAVES = int(os.environ.get("SPARK_GRAFT_BENCH_WAVES", "12"))

@@ -377,7 +377,7 @@ class CrawlEngine:
                 meta=man_q["meta"],
             )
             # retracted frontier rows, from manifest file stats — no extra job
-            n_removed = pre_q - sum(f.get("rows", 0) for f in q_man["files"])
+            n_removed = pre_q - sum(f["rows"] for f in q_man["files"])
         if seen is not None:
             man_s = self.store.manifest("seen")
             txn.stage(
@@ -416,8 +416,7 @@ class CrawlEngine:
             # else: stale/absent sidecar — next _sidecar() rebuilds from seen
             dels.unpersist()
         r.unpersist()
-        post_q = self.store.row_count("queued") or 0
-        return pre_q - post_q
+        return n_removed
 
     # -- bootstrap (wave-0 frontier from the shared seed list) ---------------
     def bootstrap(self, seeds: DataFrame) -> None:
@@ -495,9 +494,7 @@ class CrawlEngine:
         )
         pre_stamp = self._seen_stamp()
         txn.commit(meta={"wave": wave, "injected": True})
-        n_new = sum(
-            f.get("rows", 0) for f in seen_man["files"][-seen_man["new_files"]:]
-        ) if seen_man["new_files"] else 0
+        n_new = sum(f["rows"] for f in seen_man["files"])
         if n_new > 0:
             self._update_sidecar(new, pre_stamp)
         for c in self._wave_caches:
@@ -709,9 +706,10 @@ class CrawlEngine:
             fetch_log.drop("url_hash"), "fetch_log", mode="append",
             partition_by=["status"], meta={"wave": wave},
         )
-        new_log = log_man["files"][-log_man["new_files"]:] if log_man["new_files"] else []
-        fetched = sum(f.get("rows", 0) for f in new_log if f["partition"].get("status") == "200")
-        errors = sum(f.get("rows", 0) for f in new_log if f["partition"].get("status") != "200")
+        # a staged manifest lists exactly the files it wrote
+        new_log = log_man["files"]
+        fetched = sum(f["rows"] for f in new_log if f["partition"].get("status") == "200")
+        errors = sum(f["rows"] for f in new_log if f["partition"].get("status") != "200")
         next_seq = seq_offset + fetched + errors
         # next frontier = gated candidates - selection + new: the excluded
         # rows already left with the gate, so one anti-join remains, against
@@ -741,12 +739,10 @@ class CrawlEngine:
                 meta={"wave": wave},
             )
             # urls_new from the staged file stats — no count job
-            urls_new = sum(
-                f.get("rows", 0) for f in seen_man["files"][-seen_man["new_files"]:]
-            ) if seen_man["new_files"] else 0
+            urls_new = sum(f["rows"] for f in seen_man["files"])
         # excluded rows = queued - selected - survivors + new, from manifest
         # stats; only spend a write job on the excluded table when nonempty
-        next_rows = sum(f.get("rows", 0) for f in queued_man["files"])
+        next_rows = sum(f["rows"] for f in queued_man["files"])
         n_excluded = urls_in - (fetched + errors) - (next_rows - urls_new)
         if n_excluded > 0:
             txn.stage(excluded, "excluded", mode="append", meta={"wave": wave})

@@ -7,8 +7,14 @@ no network), so this implements the Iceberg *design* from the public spec:
 * every commit writes a new manifest ``<table>/_snapshots/v{N}.json`` listing
   ALL live data files (with partition values + row counts), its parent
   snapshot id, and free-form ``meta`` (engine checkpoint state lives here);
-* the manifest write is a tmp-file + ``os.rename`` — atomic on POSIX, so a
-  crash mid-commit leaves the previous snapshot intact (checkpoint-resume,
+* the root pointer ``_root/v{N}.json`` names each table's committed
+  version, and it is the ONLY visibility rule: a manifest is visible only
+  through a root version, so a table the root does not track does not exist
+  and a store without a root is empty.  Every commit (a single-table
+  :meth:`SnapshotStore.commit` or a multi-table :class:`Transaction`)
+  publishes its manifests, then swaps the root with a tmp-file +
+  ``os.rename`` — atomic on POSIX, so a crash anywhere before the rename
+  leaves the previous state of every table intact (checkpoint-resume,
   BASELINE.json:14);
 * readers open a *specific snapshot* (default: latest) and can prune the
   file list by partition values **before** Spark ever lists anything
@@ -105,24 +111,18 @@ class SnapshotStore:
         return os.path.join(self._tdir(table), "_snapshots")
 
     def versions(self, table: str) -> list[int]:
-        d = self._snap_dir(table)
-        if not os.path.isdir(d):
-            return []
-        return sorted(
-            int(m.group(1))
-            for f in os.listdir(d)
-            if (m := re.fullmatch(r"v(\d+)\.json", f))
-        )
+        """Committed versions, ``0..current_version`` (a version is always
+        its parent + 1).  Manifests beyond the root's version belong to a
+        crashed transaction and are not listed."""
+        v = self.current_version(table)
+        return [] if v is None else list(range(v + 1))
 
     def current_version(self, table: str) -> int | None:
-        """Latest COMMITTED version.  When a root pointer exists it is
-        authoritative for the tables it tracks — manifest files beyond it
-        belong to in-flight/crashed transactions and are invisible."""
+        """Latest committed version: the one the root pointer names.  None
+        for a table the root does not track and for a store with no root —
+        a manifest is visible only through a root version."""
         root = self._root_current()
-        if root is not None and table in root["tables"]:
-            return root["tables"][table]
-        vs = self.versions(table)
-        return vs[-1] if vs else None
+        return None if root is None else root["tables"].get(table)
 
     def manifest(self, table: str, version: int | None = None) -> dict | None:
         if version is None:
@@ -166,13 +166,10 @@ class SnapshotStore:
         return root
 
     def list_tables(self) -> list[str]:
-        """Tables present in this store (directories with a _snapshots/)."""
-        return sorted(
-            d
-            for d in os.listdir(self.root)
-            if not d.startswith("_")
-            and os.path.isdir(os.path.join(self.root, d, "_snapshots"))
-        )
+        """Tables the root pointer tracks (a table whose only manifests
+        belong to a crashed transaction is not one)."""
+        root = self._root_current()
+        return [] if root is None else sorted(root["tables"])
 
     def transaction(self) -> "Transaction":
         """Begin a multi-table atomic commit: ``stage`` each table (data
@@ -190,16 +187,22 @@ class SnapshotStore:
         partition_by: list[str] | None = None,
         meta: dict | None = None,
     ) -> dict:
-        """Write ``df`` as new immutable data files + a new manifest.
+        """Write ``df`` as new immutable data files + a new manifest, and
+        swap the root to it (a one-table transaction).
 
         ``mode='append'`` keeps the parent's files; ``'overwrite'`` starts the
         file list fresh (old files stay on disk for time travel).
         """
         man = self._stage_df(df, table, mode, partition_by, meta)
-        self._publish(man)
-        if self._root_current() is not None:
-            self._write_root({table: man["version"]}, None)
+        self._publish_and_swap([man], None)
         return man
+
+    def _publish_and_swap(self, mans: list[dict], meta: dict | None) -> dict:
+        """The one commit path: publish staged manifests (still invisible),
+        then swap the root to their versions — the commit point."""
+        for man in mans:
+            self._publish(man)
+        return self._write_root({m["table"]: m["version"] for m in mans}, meta)
 
     def _publish(self, man: dict) -> None:
         snap_dir = self._snap_dir(man["table"])
@@ -257,31 +260,43 @@ class SnapshotStore:
                 files.append({"path": dest, "partition": parts, "rows": nrows})
                 i += 1
         shutil.rmtree(os.path.join(self._tdir(table), ".tmp"), ignore_errors=True)
+        return self._manifest(
+            table, mode, meta, commit_id, files,
+            schema=_written_schema(df, partition_by),
+        )
 
+    def _manifest(
+        self,
+        table: str,
+        mode: str,
+        meta: dict | None,
+        commit_id: str,
+        files: list[dict],
+        **extra,
+    ) -> dict:
+        """The manifest of a staged commit of exactly ``files``, versioned
+        as the child of the table's committed version."""
         parent = self.current_version(table)
-        prev = self.manifest(table) if parent is not None else None
-        version = 0 if parent is None else parent + 1
+        prev = None if parent is None else self.manifest(table, parent)
         # O(delta) appends: an append manifest lists ONLY its new files and
         # points at its parent (files_are_delta) — writing the full live
         # list per append is O(live files) driver work and manifest bytes,
         # the commit bottleneck at 10^5-10^6 files.  Readers resolve the
         # chain (live_files); compaction emits a non-delta base, bounding
         # chain length.  This mirrors Iceberg's hierarchical manifests.
-        delta = mode == "append" and prev is not None
-        man = {
+        return {
             "table": table,
-            "version": version,
+            "version": 0 if parent is None else parent + 1,
             "parent": parent,
             "commit": commit_id,
             "mode": mode,
             "content_id": self._content_id(prev, mode, meta, commit_id, files),
-            "files_are_delta": delta,
+            "files_are_delta": mode == "append" and prev is not None,
             "files": files,
             "new_files": len(files),
             "meta": meta or {},
-            "schema": _written_schema(df, partition_by),
+            **extra,
         }
-        return man
 
     @staticmethod
     def _content_id(
@@ -303,26 +318,9 @@ class SnapshotStore:
         if prev is not None and prev.get("content_id"):
             if mode == "overwrite" and (meta or {}).get("compaction"):
                 return prev["content_id"]
-            if mode == "append" and sum(f.get("rows", 0) for f in files) == 0:
+            if mode == "append" and sum(f["rows"] for f in files) == 0:
                 return prev["content_id"]
         return commit_id
-
-    def commit_pylist(
-        self,
-        rows: list[dict],
-        schema: "pa.Schema",
-        table: str,
-        mode: str = "append",
-        meta: dict | None = None,
-    ) -> dict:
-        """Commit a tiny driver-side table (e.g. one wave-metrics row) as a
-        parquet file written directly with pyarrow — zero Spark jobs.  Same
-        manifest semantics as :meth:`commit`."""
-        man = self._stage_rows(rows, schema, table, mode, meta)
-        self._publish(man)
-        if self._root_current() is not None:
-            self._write_root({table: man["version"]}, None)
-        return man
 
     def _stage_rows(
         self,
@@ -332,29 +330,16 @@ class SnapshotStore:
         mode: str = "append",
         meta: dict | None = None,
     ) -> dict:
+        """Write a tiny driver-side table (e.g. one wave-metrics row) as one
+        parquet file with pyarrow — zero Spark jobs — and build (but do not
+        publish) its manifest."""
         commit_id = uuid.uuid4().hex[:12]
         data_dir = os.path.join(self._tdir(table), "data")
         os.makedirs(data_dir, exist_ok=True)
         dest = os.path.join(data_dir, f"{commit_id}-00000.parquet")
-        t = pa.Table.from_pylist(rows, schema=schema)
-        pq.write_table(t, dest)
-        parent = self.current_version(table)
-        prev = self.manifest(table) if parent is not None else None
-        version = 0 if parent is None else parent + 1
-        return {
-            "table": table,
-            "version": version,
-            "parent": parent,
-            "commit": commit_id,
-            "mode": mode,
-            "content_id": self._content_id(
-                prev, mode, meta, commit_id, [{"rows": len(rows)}]
-            ),
-            "files_are_delta": mode == "append" and prev is not None,
-            "files": [{"path": dest, "partition": {}, "rows": len(rows)}],
-            "new_files": 1,
-            "meta": meta or {},
-        }
+        pq.write_table(pa.Table.from_pylist(rows, schema=schema), dest)
+        files = [{"path": dest, "partition": {}, "rows": len(rows)}]
+        return self._manifest(table, mode, meta, commit_id, files)
 
     def live_files(self, table: str, version: int | None = None) -> list[dict] | None:
         """Resolve a snapshot's full live file list (see :meth:`_resolve`)."""
@@ -402,20 +387,6 @@ class SnapshotStore:
             self._live_cache[table] = (version, (files, schema))
         return files, schema
 
-    def partition_rows(
-        self, table: str, key: str, version: int | None = None
-    ) -> dict[str, int]:
-        """Row counts per partition value from manifest stats (no Spark)."""
-        files = self.live_files(table, version)
-        out: dict[str, int] = {}
-        if files is None:
-            return out
-        for f in files:
-            v = f["partition"].get(key)
-            if v is not None:
-                out[v] = out.get(v, 0) + f.get("rows", 0)
-        return out
-
     def file_count(self, table: str) -> int:
         files = self.live_files(table)
         return 0 if files is None else len(files)
@@ -425,35 +396,23 @@ class SnapshotStore:
         spark: SparkSession,
         table: str,
         partition_by: list[str] | None = None,
-        meta: dict | None = None,
     ) -> dict | None:
         """Rewrite a table's live files into one file per partition (Iceberg
         'rewrite_data_files').  Amortized maintenance: call when the manifest
         file count crosses a threshold so appends stay O(delta) but reads
-        stay O(partitions)."""
+        stay O(partitions).  The new snapshot keeps its parent's meta, marked
+        ``compaction``."""
         df = self.read(spark, table)
         if df is None:
             return None
-        m = dict(meta or {})
-        m.setdefault("compaction", True)
-        prev = self.manifest(table)
-        if prev and not meta:
-            m = {**prev["meta"], "compaction": True}
-        return self.commit(df, table, mode="overwrite", partition_by=partition_by, meta=m)
+        meta = {**self.manifest(table)["meta"], "compaction": True}
+        return self.commit(df, table, mode="overwrite", partition_by=partition_by, meta=meta)
 
     def row_count(self, table: str, version: int | None = None) -> int | None:
         """Exact row count of a snapshot from manifest stats alone (no Spark
-        job).  Falls back to footer reads for pre-stats manifests."""
+        job): every manifest records each file's ``rows``."""
         files = self.live_files(table, version)
-        if files is None:
-            return None
-        total = 0
-        for f in files:
-            r = f.get("rows")
-            if r is None:
-                r = pq.ParquetFile(f["path"]).metadata.num_rows
-            total += r
-        return total
+        return None if files is None else sum(f["rows"] for f in files)
 
     # -- read ---------------------------------------------------------------
     def read(
@@ -507,8 +466,6 @@ class SnapshotStore:
         rows = []
         for v in self.versions(table):
             m = self.manifest(table, v)
-            if not m:
-                continue
             if m.get("files_are_delta"):
                 live = live_at.get(m["parent"], 0) + len(m["files"])
             else:
@@ -529,26 +486,6 @@ class SnapshotStore:
             rows,
             schema="version int, parent int, commit string, mode string, "
             "num_files int, new_files int, meta_json string",
-        )
-
-    def root_df(self, spark: SparkSession) -> DataFrame:
-        """Root-pointer history as a DataFrame (catalog lineage)."""
-        rows = []
-        d = self._root_dir()
-        if os.path.isdir(d):
-            for f in sorted(os.listdir(d)):
-                if re.fullmatch(r"v(\d+)\.json", f):
-                    with open(os.path.join(d, f)) as fh:
-                        r = json.load(fh)
-                    rows.append(
-                        {
-                            "version": r["version"],
-                            "tables_json": json.dumps(r["tables"], sort_keys=True),
-                            "meta_json": json.dumps(r["meta"], sort_keys=True),
-                        }
-                    )
-        return spark.createDataFrame(
-            rows, schema="version int, tables_json string, meta_json string"
         )
 
     def files_df(self, spark: SparkSession, table: str) -> DataFrame:
@@ -619,16 +556,6 @@ class Transaction:
         return self.store._read_files(spark, table, man["files"], man.get("schema"))
 
     def commit(self, meta: dict | None = None) -> dict:
-        tables = {m["table"]: m["version"] for m in self._staged}
-        if not tables:
-            # empty txn = pin the current committed version of every table
-            # (root bootstrap): afterwards the root is authoritative for all
-            for t in self.store.list_tables():
-                v = self.store.current_version(t)
-                if v is not None:
-                    tables[t] = v
-        for man in self._staged:
-            self.store._publish(man)
-        root = self.store._write_root(tables, meta)
+        root = self.store._publish_and_swap(self._staged, meta)
         self._staged = []
         return root

@@ -138,3 +138,50 @@ def test_resume_store_without_schemas(spark, fix_dir, inputs, tmp_path_factory):
     assert _order(resumed) == want
     ours = sorted(r.url for r in resumed.seen_set().select("url").collect())
     assert ours == sorted(golden.seen)
+
+
+@pytest.mark.parametrize("crash_at", ["bootstrap", "wave0"])
+def test_crash_before_root_swap_resumes_to_golden(
+    spark, fix_dir, inputs, tmp_path_factory, monkeypatch, crash_at
+):
+    """A commit that published its manifests but crashed before swapping
+    the root leaves them invisible: a fresh store sees the previous root
+    for every table — including the tables wave 0 commits for the first
+    time (fetch_log, wave_metrics) — and the resumed crawl is the golden
+    one, not one that starts from a half-committed wave."""
+    seeds, graph, robots = inputs
+    st = SnapshotStore(str(tmp_path_factory.mktemp(f"crash_{crash_at}")))
+    # the first root swap that names this table is the crashing commit
+    table = {"bootstrap": "queued", "wave0": "fetch_log"}[crash_at]
+    write_root = SnapshotStore._write_root
+
+    def crash_once(self, tables, meta):
+        if table in tables:
+            monkeypatch.setattr(SnapshotStore, "_write_root", write_root)
+            raise RuntimeError("crash before the root swap")
+        return write_root(self, tables, meta)
+
+    monkeypatch.setattr(SnapshotStore, "_write_root", crash_once)
+    with pytest.raises(RuntimeError, match="before the root swap"):
+        CrawlEngine(spark, st, n_buckets=8).run(seeds, graph, robots)
+
+    fresh = SnapshotStore(st.root)
+    assert fresh.current_version(table) is None
+    assert table not in fresh.list_tables()
+    if crash_at == "wave0":
+        assert fresh.current_version("wave_metrics") is None
+        assert "wave_metrics" not in fresh.list_tables()
+        snaps = fresh.snapshots_df(spark, "queued").collect()
+        root = fresh._root_current()
+        assert max(s.version for s in snaps) == root["tables"]["queued"]
+    resumed = CrawlEngine(spark, fresh, n_buckets=8)
+    resumed.run(seeds, graph, robots)
+
+    golden = simulator.simulate_dir(fix_dir)
+    want = [
+        (r["seq"], r["url"], r["wave"], r["status"], r["fetch_ts"])
+        for r in golden.crawl_order
+    ]
+    assert _order(resumed) == want
+    ours = sorted(r.url for r in resumed.seen_set().select("url").collect())
+    assert ours == sorted(golden.seen)

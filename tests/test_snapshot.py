@@ -197,14 +197,18 @@ def test_zero_row_append_is_content_neutral(spark, store):
     # a NONEMPTY append still changes it
     store.commit(_df(spark, 10, 12), "t", mode="append", partition_by=["host_bucket"])
     assert store.manifest("t")["content_id"] != c0
-    # pylist path: zero-row append also content-neutral
+    # pylist path (how step and retract stage wave_metrics): zero-row
+    # append also content-neutral
     import pyarrow as pa
 
-    sch = pa.schema([("x", pa.int64())])
-    store.commit_pylist([{"x": 1}], sch, "m", mode="append")
-    cm = store.manifest("m")["content_id"]
-    store.commit_pylist([], sch, "m", mode="append")
-    assert store.manifest("m")["content_id"] == cm
+    def append_rows(rows):
+        txn = store.transaction()
+        txn.stage_pylist(rows, pa.schema([("x", pa.int64())]), "m", mode="append")
+        txn.commit()
+        return store.manifest("m")["content_id"]
+
+    cm = append_rows([{"x": 1}])
+    assert append_rows([]) == cm
 
 
 def test_snapshots_df_num_files_is_live_count(spark, store):
