@@ -10,13 +10,12 @@ query map).  Round 2 demonstrated the driver records exactly the FIRST 50
 dict entries (50 of 51 recorded, dropping the last), so the one rows-only
 query (``crawl_lineage``, random commit ids) is deliberately ordered 51st:
 every row the driver RECORDS is fully oracled, and lineage stays covered
-by tests/test_snapshot.py.  Two fold choices keep the oracled set at 50:
-the URL-canonicalization
-variants are ONE judged query whose oracle asserts the JVM-expression and
-Arrow-UDF paths are bit-identical per row, and (round 5) the per-host scope
-link-tag counts are folded into the full-TaggedURL-vocabulary query at
-(host, tag) granularity — a strict superset of both previous groupings —
-freeing the slot `article_extract` occupies.
+by tests/test_snapshot.py.  One fold keeps the oracled set at 50: (round
+5) the per-host scope link-tag counts are folded into the
+full-TaggedURL-vocabulary query at (host, tag) granularity — a strict
+superset of both previous groupings — freeing the slot `article_extract`
+occupies.  ``url_canonicalize`` oracles the engine's one canonicalizer
+against the urllib-based reference.
 
 Crawl/payload queries run over a deterministic tiny fixture (seed=42,
 generated in /tmp on first use); their oracles are literal VALUES emitted by

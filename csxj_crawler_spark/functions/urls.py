@@ -3,162 +3,48 @@
 Reference parity: csxj-crawler compared raw URL strings after urlparse-level
 cleanup when diffing fresh TOCs against the stored per-provider URL set
 (SURVEY.md §2.2 P1, [M csxj/common/tagging.py]).  The exact rule is locked in
-``spec`` and tested against the pure-Python simulator's independent
-implementation.
+``spec``.
 
-Two implementations of the same rule:
-
-* :func:`canonicalize_udf` — vectorized pandas UDF (Arrow batches, pure
-  ``pd.Series.str`` ops — no per-row Python), per BASELINE.json:6
-  "vectorized Arrow UDFs over canonicalized/hashed URLs".
-* :func:`canonicalize_expr` — pure Spark Column expression (JVM-side,
-  whole-stage-codegen friendly) for the hot path.  Tested to agree with the
-  UDF bit-for-bit; the engine uses this one by default so canonicalization
-  never leaves the JVM.
+One implementation: :func:`canonicalize_expr`, a JVM-side Column expression
+(whole-stage-codegen friendly, never leaves the JVM).  :func:`host_of` and
+:func:`path_of` read the same grammar off its output.  All three are tested
+against the independent urllib-based reference ``simulator.canon_py`` in
+tests/test_urls.py.
 
 Hashing is always ``xxhash64`` (built-in, deterministic across sessions).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 from csxj_crawler_spark import spec
-
-# ---------------------------------------------------------------------------
-# regex building blocks (shared by both implementations)
-# ---------------------------------------------------------------------------
 
 # tracking params: exact names or utm_* prefix, as key=value pairs
 _TRACK_ALT = "|".join(sorted(spec.TRACKING_PARAMS)) + "|utm_[a-z0-9_]*"
 # a tracking pair inside a query string (value = anything up to & or end)
 _TRACK_PAIR = rf"(?:{_TRACK_ALT})=[^&#]*"
-
-
-def _canon_arrow(s: pd.Series) -> pd.Series:
-    """Canonicalization on pyarrow.compute kernels (RE2, C++-vectorized).
-
-    Bit-identical to :func:`_canon_pandas` (differential-tested in
-    tests/test_urls.py): pandas ``.str.replace`` runs Python ``re`` once per
-    element, so at 10 passes the UDF spent ~10 string-scan interpreter loops
-    per batch; RE2 kernels do the same passes at C++ speed (~4x the
-    whole-stage throughput at 48M URLs, see BASELINE.md).  RE2 has no
-    lookahead, so the three lookahead patterns are rewritten to consume-and-
-    re-emit (`\\1\\2`), which is equivalent here: pass 4a removes every
-    tracking pair that is followed by ``&``, so pass 4b's trailing-context
-    match can never overlap another candidate.
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    a = pc.utf8_trim_whitespace(
-        pc.fill_null(pa.Array.from_pandas(s, type=pa.string()), "")
-    )
-    # 1. strip fragment
-    a = pc.replace_substring_regex(a, pattern=r"#.*$", replacement="")
-    # 2. lowercase scheme and host (authority part only); tail untouched
-    ex = pc.extract_regex(
-        a, r"^(?P<sch>[A-Za-z][A-Za-z0-9+.-]*)://(?P<auth>[^/?#]*)(?P<tail>(?s:.*))$"
-    )
-    lowered = pc.binary_join_element_wise(
-        pc.utf8_lower(pc.struct_field(ex, "sch")),
-        "://",
-        pc.utf8_lower(pc.struct_field(ex, "auth")),
-        pc.struct_field(ex, "tail"),
-        "",
-    )
-    a = pc.if_else(pc.is_valid(ex), lowered, a)
-    # 3. strip default ports (consuming rewrite of the lookahead)
-    a = pc.replace_substring_regex(
-        a, pattern=r"^(http://[^/?#:]*):80([/?#]|$)", replacement=r"\1\2"
-    )
-    a = pc.replace_substring_regex(
-        a, pattern=r"^(https://[^/?#:]*):443([/?#]|$)", replacement=r"\1\2"
-    )
-    # 4. drop tracking params, then tidy ?&
-    a = pc.replace_substring_regex(
-        a, pattern=rf"(?:{_TRACK_PAIR}&)+", replacement=""
-    )
-    # 4b. trailing-context form.  The pandas/JVM rule uses a lookahead
-    # (`(?=$|&)`), which does NOT consume the following `&`, so a CHAIN of
-    # adjacent pairs (`&utm_a=1&utm_b=2&x`) is fully removed in one pass.
-    # RE2 has no lookahead; the consuming rewrite (`($|&)` -> `\1`) eats the
-    # `&` and skips every other pair in a chain (and pass 4a's removals can
-    # SPLICE new adjacent pairs, e.g. `?ututm_a=1&m_y=1&...`).  Loop the
-    # consuming pass to a fixpoint: a chain of k pairs converges in <=k
-    # iterations, and each iteration only removes strings the lookahead rule
-    # would also remove, so the fixpoint is bit-identical to the
-    # pandas/JVM single lookahead pass (differential-tested incl. a
-    # u/t/m-bearing alphabet in tests/test_urls.py).
-    pat_4b = rf"[?&](?:{_TRACK_PAIR})($|&)"
-    while True:
-        b = pc.replace_substring_regex(a, pattern=pat_4b, replacement=r"\1")
-        if pc.all(pc.equal(b, a)).as_py() is not False:
-            a = b
-            break
-        a = b
-    a = pc.replace_substring_regex(a, pattern=r"\?&", replacement="?")
-    a = pc.replace_substring_regex(a, pattern=r"[?&]$", replacement="")
-    # 5. ensure non-empty path before ? or end
-    a = pc.replace_substring_regex(
-        a, pattern=r"^([a-z][a-z0-9+.-]*://[^/?#]+)(\?|$)", replacement=r"\1/\2"
-    )
-    # 6. strip trailing slash at end of non-root path (also before a query)
-    a = pc.replace_substring_regex(
-        a,
-        pattern=r"^([a-z][a-z0-9+.-]*://[^/?#]+/[^?#]*?)/+(\?|$)",
-        replacement=r"\1\2",
-    )
-    return a.to_pandas()
-
-
-def _canon_pandas(s: pd.Series) -> pd.Series:
-    """Reference implementation: same rule, pandas ``.str`` + Python ``re``
-    (one interpreter pass per element per pattern — kept as the readable
-    spec and the differential-test counterpart of :func:`_canon_arrow`)."""
-    s = s.fillna("").str.strip()
-    # 1. strip fragment
-    s = s.str.replace(r"#.*$", "", regex=True)
-    # 2. lowercase scheme and host (authority part only)
-    s = s.str.replace(
-        r"^([A-Za-z][A-Za-z0-9+.-]*)://([^/?#]*)",
-        lambda m: m.group(1).lower() + "://" + m.group(2).lower(),
-        regex=True,
-    )
-    # 3. strip default ports
-    s = s.str.replace(r"^(http://[^/?#:]*):80(?=[/?#]|$)", r"\1", regex=True)
-    s = s.str.replace(r"^(https://[^/?#:]*):443(?=[/?#]|$)", r"\1", regex=True)
-    # 4. drop tracking params (leading, middle, trailing), then tidy ?&
-    s = s.str.replace(rf"(?:{_TRACK_PAIR}&)+", "", regex=True)
-    s = s.str.replace(rf"[?&](?:{_TRACK_PAIR})(?=$|&)", "", regex=True)
-    s = s.str.replace(r"\?&", "?", regex=True)
-    s = s.str.replace(r"[?&]$", "", regex=True)
-    # 5. ensure non-empty path before ? or end
-    s = s.str.replace(r"^([a-z][a-z0-9+.-]*://[^/?#]+)(\?|$)", r"\1/\2", regex=True)
-    # 6. strip trailing slash at end of non-root path (also before a query)
-    s = s.str.replace(r"^([a-z][a-z0-9+.-]*://[^/?#]+/[^?#]*?)/+(\?|$)", r"\1\2", regex=True)
-    return s
-
-
-@F.pandas_udf(StringType())
-def canonicalize_udf(urls: pd.Series) -> pd.Series:  # pragma: no cover - thin
-    try:
-        return _canon_arrow(urls)
-    except (ImportError, AttributeError):  # very old pyarrow: RE2 kernels absent
-        return _canon_pandas(urls)
+# what the reference strips before parsing: ``str.strip()`` (every
+# ``str.isspace()`` char), then urlsplit's C0-or-space lstrip and its removal
+# of tab, CR and LF anywhere in the URL
+_ISSPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    + "".join(map(chr, range(0x2000, 0x200B)))
+    + "\u2028\u2029\u202f\u205f\u3000"
+)
+_C0_OR_SPACE = "".join(chr(c) for c in range(0x21))
+# an optional scheme as urlsplit finds it; an authority follows after //
+# and ends at / ? or #
+_SCHEME = r"^(?:[A-Za-z][A-Za-z0-9+.-]*:)?"
 
 
 def canonicalize_expr(col: Column) -> Column:
-    """Same rule as :func:`canonicalize_udf` as a JVM-side Column expression.
-
-    Stays inside whole-stage codegen — the preferred hot-path form.
-    """
-    c = F.trim(col)
+    """The P1 canonical rule as a JVM-side Column expression."""
+    c = F.trim(col, F.lit(_ISSPACE))
+    c = F.translate(F.ltrim(c, F.lit(_C0_OR_SPACE)), "\t\r\n", "")
     # strip fragment
-    c = F.regexp_replace(c, r"#.*$", "")
+    c = F.regexp_replace(c, r"(?s)#.*$", "")
     # lowercase scheme://host prefix. Spark regexp_replace cannot lowercase a
     # backreference, so split: head = scheme://authority, tail = rest.
     head = F.regexp_extract(c, r"^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)", 1)
@@ -167,8 +53,9 @@ def canonicalize_expr(col: Column) -> Column:
     # strip default ports
     c = F.regexp_replace(c, r"^(http://[^/?#:]*):80(?=[/?#]|$)", "$1")
     c = F.regexp_replace(c, r"^(https://[^/?#:]*):443(?=[/?#]|$)", "$1")
-    # drop tracking params
-    c = F.regexp_replace(c, rf"(?:{_TRACK_PAIR}&)+", "")
+    # drop tracking params: runs of pairs that start at a key boundary, then
+    # a last pair before the end or the next pair
+    c = F.regexp_replace(c, rf"(?<=[?&])(?:{_TRACK_PAIR}&)+", "")
     c = F.regexp_replace(c, rf"[?&](?:{_TRACK_PAIR})(?=$|&)", "")
     c = F.regexp_replace(c, r"\?&", "?")
     c = F.regexp_replace(c, r"[?&]$", "")
@@ -185,12 +72,15 @@ def url_hash(col: Column) -> Column:
 
 
 def host_of(col: Column) -> Column:
-    """Host extraction (P3) — JVM built-in parse_url."""
-    return F.lower(F.parse_url(col, F.lit("HOST")))
+    """Host (P3): the authority after its last ``@`` and before any
+    ``:port``, lowercased; "" where there is no authority.  Never raises."""
+    return F.lower(F.regexp_extract(col, _SCHEME + r"//(?:[^/?#]*@)?([^/?#:@]*)", 1))
 
 
 def path_of(col: Column) -> Column:
-    return F.coalesce(F.parse_url(col, F.lit("PATH")), F.lit("/"))
+    """Path: what follows the authority up to ``?``/``#``, ``/`` when empty."""
+    path = F.regexp_extract(col, _SCHEME + r"(?://[^/?#]*)?([^?#]*)", 1)
+    return F.when(path == "", F.lit("/")).otherwise(path)
 
 
 def host_bucket(host: Column, n_buckets: int = spec.DEFAULT_HOST_BUCKETS) -> Column:

@@ -245,25 +245,33 @@ class CrawlEngine:
             self._rebuild_sidecar(stamp)
         return self.store.read(self.spark, self._sidecar_table)
 
-    def _update_sidecar(self, new: DataFrame, pre_stamp: dict) -> None:
-        """Fold the just-committed discoveries into the per-(bucket, salt)
-        sub-filters (D4/D5) and stamp the covered seen snapshot.
+    def _update_sidecar(
+        self,
+        pre_stamp: dict,
+        adds: DataFrame | None = None,
+        dels: DataFrame | None = None,
+    ) -> None:
+        """Fold a just-committed delta into the per-(bucket, salt)
+        sub-filters (D4/D5) and stamp the covered seen snapshot: ``adds``
+        are a wave's discoveries, ``dels`` the seen rows a retraction
+        removed.
 
-        ``pre_stamp`` (the seen stamp captured BEFORE this wave's commit) is
-        the validity gate: the prev sidecar is only updated if it covered
+        ``pre_stamp`` (the seen stamp captured BEFORE the commit) is the
+        validity gate: the prev sidecar is only updated if it covered
         exactly the pre-commit seen snapshot.  Any mismatch (a sidecar
         written below a different bloom_min_seen threshold, a divergent
         content chain, a changed salt) falls back to a full rebuild —
-        updating a stale sidecar with only the last wave's delta would
-        re-stamp it as valid while missing earlier rows: false negatives,
-        re-crawled duplicates.
+        updating a stale sidecar with only the last delta would re-stamp it
+        as valid while missing earlier rows: false negatives, re-crawled
+        duplicates.  Bloom bits cannot be un-set, so ``dels`` rebuild a
+        bloom sidecar; a cuckoo sidecar deletes their fingerprints in place.
 
-        Fit check, from the tiny (bucket, salt, n, size) metadata and the
-        wave-sized delta counts: a bloom sub-filter takes the delta while
-        (n + c)·bits_per_key ≤ m; a cuckoo sub-filter while n + c ≤ 95% of
-        its ACTUAL slot count (4-slot tables insert reliably below that;
-        ``M.cuckoo_slots`` is the constructor's own sizing).  A group that
-        would not fit rebuilds the whole sidecar at the right size —
+        Fit check (``adds`` only), from the tiny (bucket, salt, n, size)
+        metadata and the delta counts: a bloom sub-filter takes the delta
+        while (n + c)·bits_per_key ≤ m; a cuckoo sub-filter while n + c ≤
+        95% of its ACTUAL slot count (4-slot tables insert reliably below
+        that; ``M.cuckoo_slots`` is the constructor's own sizing).  A group
+        that would not fit rebuilds the whole sidecar at the right size —
         amortized-doubling cost, like compaction.
 
         Bloom deltas are built AT THE MERGED SUB-FILTER'S m, so the merge is
@@ -275,54 +283,55 @@ class CrawlEngine:
             return
         stamp = self._seen_stamp()
         tbl = self._sidecar_table
+        bloom = self.seen_filter == "bloom"
         prev = (
             self.store.read(self.spark, tbl)
             if self._sidecar_covers(pre_stamp) else None
         )
-        if prev is None:
+        if prev is None or (bloom and dels is not None):
             self._rebuild_sidecar(stamp)
             return
-        bloom = self.seen_filter == "bloom"
-        size_col = "m" if bloom else "capacity"
-        # tiny driver-side metadata reads: (bucket, salt, n, size) without
-        # blobs, and per-sub-filter delta counts of the wave-sized `new`
-        prev_ns = {
-            (r["host_bucket"], r["salt"]): (int(r["n"]), int(r[size_col]))
-            for r in prev.select("host_bucket", "salt", "n", size_col).collect()
-        }
-        delta_n = {
-            (r["host_bucket"], r["salt"]): int(r["cnt"])
-            for r in new.groupBy(
-                "host_bucket",
-                F.pmod(F.col("url_hash"), F.lit(spec.BLOOM_SALT))
-                .cast("int")
-                .alias("salt"),
-            )
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        }
+        if adds is not None:
+            size_col = "m" if bloom else "capacity"
+            # tiny driver-side metadata reads: (bucket, salt, n, size)
+            # without blobs, and per-sub-filter counts of the delta
+            prev_ns = {
+                (r["host_bucket"], r["salt"]): (int(r["n"]), int(r[size_col]))
+                for r in prev.select("host_bucket", "salt", "n", size_col).collect()
+            }
+            delta_n = {
+                (r["host_bucket"], r["salt"]): int(r["cnt"])
+                for r in adds.groupBy(
+                    "host_bucket",
+                    F.pmod(F.col("url_hash"), F.lit(spec.BLOOM_SALT))
+                    .cast("int")
+                    .alias("salt"),
+                )
+                .agg(F.count("*").alias("cnt"))
+                .collect()
+            }
 
-        def fits(n: int, size: int) -> bool:
+            def fits(n: int, size: int) -> bool:
+                if bloom:
+                    return n * spec.BLOOM_BITS_PER_KEY <= size
+                return n <= 0.95 * M.cuckoo_slots(size)
+
+            if not all(
+                fits(prev_ns[key][0] + c, prev_ns[key][1])
+                for key, c in delta_n.items()
+                if key in prev_ns
+            ):
+                self._rebuild_sidecar(stamp)
+                return
             if bloom:
-                return n * spec.BLOOM_BITS_PER_KEY <= size
-            return n <= 0.95 * M.cuckoo_slots(size)
-
-        if not all(
-            fits(prev_ns[key][0] + c, prev_ns[key][1])
-            for key, c in delta_n.items()
-            if key in prev_ns
-        ):
-            self._rebuild_sidecar(stamp)
-            return
-        if bloom:
-            # keys new to the sidecar size to their own delta count (first
-            # blob, no tiling on merge)
-            mins = {key: size for key, (_n, size) in prev_ns.items()}
-            delta = M.build_blooms(new, min_m_by_key=mins, salt=spec.BLOOM_SALT)
-            merged = M.merge_blooms(delta.unionByName(prev.select(*delta.columns)))
-            self.store.commit(merged, tbl, mode="overwrite", meta=stamp)
-            return
-        upd = M.cuckoo_update(prev, adds=new, salt=spec.BLOOM_SALT).cache()
+                # keys new to the sidecar size to their own delta count
+                # (first blob, no tiling on merge)
+                mins = {key: size for key, (_n, size) in prev_ns.items()}
+                delta = M.build_blooms(adds, min_m_by_key=mins, salt=spec.BLOOM_SALT)
+                merged = M.merge_blooms(delta.unionByName(prev.select(*delta.columns)))
+                self.store.commit(merged, tbl, mode="overwrite", meta=stamp)
+                return
+        upd = M.cuckoo_update(prev, adds=adds, dels=dels, salt=spec.BLOOM_SALT).cache()
         if upd.filter(~F.col("ok")).limit(1).count() > 0:
             self._rebuild_sidecar(stamp)
         else:
@@ -338,11 +347,11 @@ class CrawlEngine:
         for: with ``seen_filter="cuckoo"`` the sidecar DELETES exactly the
         retracted fingerprints in O(delta) (cuckoo deletion precondition —
         delete only inserted keys — is guaranteed by semi-joining the batch
-        against seen first); with "bloom" the stamp mismatch forces a full
-        sidecar rebuild from the seen table on next use, because bloom bits
-        cannot be un-set.  Either way exactness is untouched (the sidecar is
-        a prefilter; parity-tested in tests/test_retraction.py).  Returns
-        the number of frontier rows retracted."""
+        against seen first); with "bloom" the sidecar is rebuilt from the
+        seen table, because bloom bits cannot be un-set.  Either way
+        exactness is untouched (the sidecar is a prefilter; parity-tested in
+        tests/test_retraction.py).  Returns the number of frontier rows
+        retracted."""
         man_q = self.store.manifest("queued")
         if man_q is None:
             return 0
@@ -361,7 +370,7 @@ class CrawlEngine:
         pre_q = self.store.row_count("queued") or 0
         pre_stamp = self._seen_stamp()
         dels = None
-        if self.seen_filter == "cuckoo" and seen is not None:
+        if seen is not None:
             dels = (
                 seen.join(F.broadcast(r), keys, "left_semi")
                 .select("host_bucket", "url_hash")
@@ -403,17 +412,7 @@ class CrawlEngine:
         )
         txn.commit(meta=dict(man_q["meta"], retracted=True))
         if dels is not None:
-            prev = (
-                self.store.read(self.spark, "cuckoos")
-                if self._sidecar_covers(pre_stamp) else None
-            )
-            if prev is not None:
-                upd = M.cuckoo_update(prev, dels=dels, salt=spec.BLOOM_SALT)
-                self.store.commit(
-                    upd.drop("ok"), "cuckoos", mode="overwrite",
-                    meta=self._seen_stamp(),  # post-retraction identity
-                )
-            # else: stale/absent sidecar — next _sidecar() rebuilds from seen
+            self._update_sidecar(pre_stamp, dels=dels)
             dels.unpersist()
         r.unpersist()
         return n_removed
@@ -496,7 +495,7 @@ class CrawlEngine:
         txn.commit(meta={"wave": wave, "injected": True})
         n_new = sum(f["rows"] for f in seen_man["files"])
         if n_new > 0:
-            self._update_sidecar(new, pre_stamp)
+            self._update_sidecar(pre_stamp, adds=new)
         for c in self._wave_caches:
             c.unpersist()
         self._wave_caches = []
@@ -770,7 +769,7 @@ class CrawlEngine:
         if urls_new > 0:
             # sidecar updates OUTSIDE the txn: it is self-healing (a
             # stale sidecar is detected by its stamp and rebuilt from seen)
-            self._update_sidecar(staged_new, pre_stamp)
+            self._update_sidecar(pre_stamp, adds=staged_new)
         # amortized maintenance: keep append-heavy tables' file counts bounded
         if self.store.file_count("seen") > self.compact_files:
             self.store.compact(spark, "seen", partition_by=["host_bucket"])

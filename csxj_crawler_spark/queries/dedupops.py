@@ -38,28 +38,6 @@ def _shingle_list(text: str) -> list[str]:
     return [" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)]
 
 
-def _shingle_hashes(text: str) -> np.ndarray:
-    sh = _shingle_list(text)
-    if not sh:
-        return np.zeros(0, dtype=np.uint64)
-    return pd.util.hash_array(np.asarray(sh, dtype=object)).astype(np.uint64)
-
-
-def _minhash_sig_perdoc(texts: pd.Series) -> pd.Series:
-    """Per-document reference implementation (round ≤3 shape) — kept ONLY as
-    the bit-parity counterpart of the whole-batch path in tests."""
-    out = []
-    for t in texts.fillna(""):
-        h = _shingle_hashes(t)
-        if len(h) == 0:
-            out.append([0] * N_HASHES)
-            continue
-        # (n_shingles, N_HASHES) affine family, min per column
-        vals = (h[:, None] * _A[None, :] + _B[None, :]) % _P
-        out.append(vals.min(axis=0).astype(np.int64).tolist())
-    return pd.Series(out)
-
-
 #: docs are chunked so the transient (shingles × 64) uint64 matrix stays
 #: L2-resident (~1 MB): the affine+modulo pass is memory-bound, and measured
 #: on this host a 2048-shingle chunk runs it 13× faster than a 128k-shingle
@@ -75,7 +53,8 @@ def _minhash_sig_batch(texts: pd.Series) -> pd.Series:
     (shingle × N_HASHES) affine matrix.  Empty documents are excluded from
     the reduceat boundary list (an empty segment would alias its neighbor)
     and backfilled with the zero signature.  Bit-identical to
-    :func:`_minhash_sig_perdoc` (parity test in tests/test_dedup_ops.py)."""
+    :func:`_ref_minhash`, the per-document reference (parity test in
+    tests/test_dedup_ops.py)."""
     n = len(texts)
     sh_per_doc = [_shingle_list(t) for t in texts.fillna("")]
     lens = np.array([len(s) for s in sh_per_doc], dtype=np.int64)

@@ -108,3 +108,68 @@ def test_parity_across_engine_configs(golden, spark, fix_dir, tmp_path_factory):
     got = [(r["seq"], r["url"]) for r in eng.crawl_order().collect()]
     want = [(r["seq"], r["url"]) for r in golden.crawl_order]
     assert got == want
+
+
+def _respell_outlinks(fix_dir: str, out_dir) -> str:
+    """The fixture with its outlinks spelled the way real pages spell them:
+    trailing newlines, leading tabs, a CR inside the URL, a query whose key
+    ends in ``ref`` and paths with a space and ``|``.  Seeds and robots are
+    copied unchanged."""
+    import shutil
+    from urllib.parse import urlsplit, urlunsplit
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for name in ("seeds.parquet", "robots.parquet"):
+        shutil.copy(f"{fix_dir}/{name}", out_dir / name)
+    graph = pq.read_table(f"{fix_dir}/web_graph.parquet")
+    pages, k = graph.to_pylist(), 0
+    for page in pages:
+        for link in page["outlinks"] or []:
+            k += 1
+            u = urlsplit(link["url"])
+            if k % 13 == 0:
+                u = u._replace(query="pref=1&page=2")
+            if k % 17 == 0:
+                u = u._replace(path=u.path + "/a b|c")
+            url = urlunsplit(u)
+            if k % 11 == 0:
+                cut = url.index("/", url.index("//") + 2) + 1
+                url = url[:cut] + "\r" + url[cut:]
+            if k % 7 == 0:
+                url = "\t" + url
+            if k % 5 == 0:
+                url += "\n"
+            link["url"] = url
+    pq.write_table(
+        pa.Table.from_pylist(pages, schema=graph.schema),
+        out_dir / "web_graph.parquet",
+    )
+    return str(out_dir)
+
+
+@pytest.mark.parametrize("seen_filter", ["none", "bloom"])
+def test_respelled_outlinks_match_simulator(spark, fix_dir, tmp_path, seen_filter):
+    """Outlinks with whitespace, a CR, ``pref=`` and path characters that
+    ``java.net.URI`` rejects crawl to the simulator's exact order and seen
+    set: canonicalization, host and path never raise and agree with the
+    reference."""
+    d = _respell_outlinks(fix_dir, tmp_path)
+    golden = simulator.simulate_dir(d)
+    store = SnapshotStore(str(tmp_path / "store"))
+    eng = CrawlEngine(
+        spark, store, n_buckets=8, seen_filter=seen_filter, bloom_min_seen=0
+    )
+    eng.run(*(spark.read.parquet(f"{d}/{t}.parquet") for t in ("seeds", "web_graph", "robots")))
+    got = [
+        (r["seq"], r["url"], r["host"], r["wave"], r["status"])
+        for r in eng.crawl_order().collect()
+    ]
+    want = [
+        (r["seq"], r["url"], r["host"], r["wave"], r["status"])
+        for r in golden.crawl_order
+    ]
+    assert got == want
+    assert {r["url"] for r in eng.seen_set().collect()} == set(golden.seen)
+    assert len(golden.seen) > len(simulator.simulate_dir(fix_dir).seen)

@@ -1,17 +1,21 @@
-"""P1-P3: canonicalization parity (expr == pandas UDF == pure-Python
-reference impl), idempotence, hashing/bucketing properties."""
+"""P1-P3: the engine's canonicalizer (``canonicalize_expr``) and the host and
+path it yields match the independent urllib-based reference, canonical URLs
+are fixed points, and hashing/bucketing properties hold."""
 
 from __future__ import annotations
 
-import pandas as pd
-import pyarrow.parquet as pq
-import pytest
-from hypothesis import given, settings
-from hypothesis import strategies as st
+import random
+from urllib.parse import urlsplit
 
+import pyarrow.parquet as pq
+
+from csxj_crawler_spark import spec
+from csxj_crawler_spark.fixtures import simulator
 from csxj_crawler_spark.fixtures.simulator import canon_py
 from csxj_crawler_spark.functions import urls as U
-from csxj_crawler_spark.functions.urls import _canon_pandas
+
+ISSPACE = [chr(c) for c in range(0x110000) if chr(c).isspace()]
+C0_OR_SPACE = [chr(c) for c in range(0x21)]
 
 
 def _fixture_urls(fix_dir):
@@ -24,13 +28,6 @@ def _fixture_urls(fix_dir):
     return urls
 
 
-def test_pandas_matches_python_reference(fix_dir):
-    urls = _fixture_urls(fix_dir)
-    got = _canon_pandas(pd.Series(urls)).tolist()
-    want = [canon_py(u) for u in urls]
-    assert got == want
-
-
 def test_expr_matches_python_reference(spark, fix_dir):
     from pyspark.sql import functions as F
 
@@ -41,74 +38,95 @@ def test_expr_matches_python_reference(spark, fix_dir):
     assert got == want
 
 
-def test_udf_matches_expr(spark, fix_dir):
+_KEYS = [
+    "page", "id", "q", "end", "m_y", "pref", "href", "xref", "myutm_a",
+    "ututm_a", "utm_source", "utm_x", "utm_", *sorted(spec.TRACKING_PARAMS),
+]
+
+
+def _fuzz_urls(n: int, seed: int = 14) -> list[str]:
+    """``n`` seeded URL-shaped strings: mixed-case scheme and host, default
+    and non-default ports, paths with space, ``|``, ``"`` and ``%``, queries
+    mixing tracking keys with keys that merely contain or end in a tracking
+    name, fragments, whitespace/C0 padding and an embedded tab/CR/LF."""
+    rng = random.Random(seed)
+
+    def word(alphabet, lo, hi):
+        return "".join(rng.choice(alphabet) for _ in range(rng.randint(lo, hi)))
+
+    out = []
+    for _ in range(n):
+        url = rng.choice(["http", "HTTP", "https", "HtTpS", "Http"]) + "://"
+        url += rng.choice(["lesoir-0.example", "A-B.Example", "x.org", "WWW.Dh.BE"])
+        url += rng.choice(["", ":80", ":443", ":8080"])
+        url += "".join("/" + word('abZ09._-~ |"%', 0, 5) for _ in range(rng.randint(0, 3)))
+        if rng.random() < 0.2:
+            url += "/" * rng.randint(1, 2)
+        if rng.random() < 0.7:
+            pairs = [
+                f"{rng.choice(_KEYS)}={word('ab12_ |', 0, 3)}"
+                for _ in range(rng.randint(0, 5))
+            ]
+            url += "?" + "&".join(pairs)
+        url += rng.choice(["", "", "#x", "#a-b", "#f?utm_a=1&x=2"])
+        if rng.random() < 0.3:
+            at = rng.randint(0, len(url))
+            url = url[:at] + rng.choice("\t\r\n") + url[at:]
+        if rng.random() < 0.3:
+            url = word(rng.choice([ISSPACE, C0_OR_SPACE]), 1, 3) + url
+        if rng.random() < 0.3:
+            url += word(ISSPACE, 1, 3)
+        out.append(url)
+    return out
+
+
+def test_engine_urls_match_reference_batched(spark):
+    """≥10k inputs through ONE Spark job: canonical URL, host and path equal
+    the reference's (``canon_py``, ``simulator._host_of``, urlsplit's path).
+    Canonicalizing twice equals the reference twice, which is the canonical
+    URL itself unless that begins or ends in characters the reference strips
+    (a query value ending in a space, a leading U+00A0 behind C0 padding)."""
     from pyspark.sql import functions as F
 
-    urls = _fixture_urls(fix_dir)[:500]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    rows = df.select(
-        U.canonicalize_expr(F.col("url")).alias("e"),
-        U.canonicalize_udf(F.col("url")).alias("u"),
-    ).collect()
-    assert all(r["e"] == r["u"] for r in rows)
-
-
-def test_arrow_tracking_chain_and_splice_regression():
-    """Round-4 regression (ADVICE r3, high): pass 4a's removal can SPLICE new
-    adjacent tracking pairs, and chains of pairs need the lookahead semantics;
-    the arrow path now loops its consuming 4b rewrite to a fixpoint."""
-    from csxj_crawler_spark.functions.urls import _canon_arrow
-
-    cases = [
-        "http://h/?ututm_a=1&m_y=1&ututm_b=2&m_w=3&end",  # the ADVICE repro
-        "http://h/?utm_a=1&utm_b=2&utm_c=3",  # chain, consuming-skip shape
+    urls = _fuzz_urls(12_000)
+    # the old splice cases: 4a's removals must not splice a key's tail onto
+    # the next pair into a new tracking pair
+    urls += [
+        "http://h/?ututm_a=1&m_y=1&ututm_b=2&m_w=3&end=1",
+        "http://h/?ututm_a=1&m_b=2&ututm_c=3&m_d=4&end=1",
+        "http://h/?utm_a=1&utm_b=2&utm_c=3",
         "http://h/?x=1&utm_a=1&utm_b=2&utm_c=3&y=2",
-        "http://h/?ututm_a=1&m_b=2&ututm_c=3&m_d=4",  # double splice
-        "http://h/?a=but&m_x=3&end",  # mid-value splice must NOT be removed
+        "http://h/?a=but&m_x=3&end=1",
+        "http://h/?pref=1&page=2",
+        "http://h/?href=1&q=2",
     ]
-    got = _canon_arrow(pd.Series(cases)).tolist()
-    want = _canon_pandas(pd.Series(cases)).tolist()
-    assert got == want
-    assert want[0] == "http://h/&end"
-
-
-_hosts = st.sampled_from(["lesoir-0.example", "A-B.Example", "x.org"])
-_paths = st.lists(
-    st.text(alphabet="abcZ09._-", min_size=1, max_size=6), min_size=0, max_size=4
-).map(lambda segs: "/" + "/".join(segs))
-_queries = st.lists(
-    st.tuples(
-        st.sampled_from(["page", "id", "utm_source", "utm_x", "fbclid", "q"]),
-        st.text(alphabet="ab12", min_size=0, max_size=4),
-    ),
-    min_size=0,
-    max_size=4,
-).map(lambda kvs: "&".join(f"{k}={v}" for k, v in kvs))
-
-
-@settings(max_examples=300, deadline=None)
-@given(
-    scheme=st.sampled_from(["http", "HTTP", "https"]),
-    host=_hosts,
-    port=st.sampled_from(["", ":80", ":443", ":8080"]),
-    path=_paths,
-    slash=st.booleans(),
-    query=_queries,
-    frag=st.sampled_from(["", "#x", "#a-b"]),
-)
-def test_canon_idempotent_and_matches(scheme, host, port, path, slash, query, frag):
-    url = f"{scheme}://{host}{port}{path}"
-    if slash and path != "/":
-        url += "/"
-    if query:
-        url += "?" + query
-    url += frag
-    want = canon_py(url)
-    got = _canon_pandas(pd.Series([url])).iloc[0]
-    assert got == want
-    # idempotence: canon(canon(u)) == canon(u)
-    assert canon_py(want) == want
-    assert _canon_pandas(pd.Series([got])).iloc[0] == got
+    # every str.isspace() char, leading, trailing, inside the path and
+    # inside the fragment
+    urls += [
+        f"{ws}http://H.example/a{ws}b/?utm_a=1&page=2#f{ws}g{ws}" for ws in ISSPACE
+    ]
+    canon = U.canonicalize_expr(F.col("url"))
+    rows = (
+        spark.createDataFrame([(i, u) for i, u in enumerate(urls)], "i int, url string")
+        .select("i", canon.alias("c"))
+        .select(
+            "i", "c",
+            U.canonicalize_expr(F.col("c")).alias("cc"),
+            U.host_of(F.col("c")).alias("host"),
+            U.path_of(F.col("c")).alias("path"),
+        )
+        .collect()
+    )
+    assert len(rows) == len(urls)
+    bad = []
+    for r in rows:
+        want = canon_py(urls[r["i"]])
+        got = (r["c"], r["cc"], r["host"], r["path"])
+        exp = (want, canon_py(want), simulator._host_of(want), urlsplit(want).path or "/")
+        if got != exp or (want == want.strip() and r["cc"] != want):
+            bad.append((urls[r["i"]], got, exp))
+    assert not bad, f"{len(bad)} mismatches, first: {bad[:3]}"
+    assert canon_py("http://h/?pref=1&page=2") == "http://h/?pref=1&page=2"
 
 
 def test_host_bucket_stable_and_bounded(spark, fix_dir):
@@ -127,48 +145,3 @@ def test_host_bucket_stable_and_bounded(spark, fix_dir):
     for r in out:
         by_host.setdefault(r["host"], set()).add(r["b"])
     assert all(len(v) == 1 for v in by_host.values())
-
-
-# alphabet includes u/t/m so the strategy can FORM tracking params (`utm_a=1`)
-# and splice-prone neighborhoods (`ututm_a=1&m_y=1`) — the round-3 arrow/pandas
-# divergence lived exactly there and the old alphabet could never reach it
-_nasty = st.text(
-    alphabet="utmabAB09:/?&=#._-%+~ \t", min_size=0, max_size=40
-)
-
-
-@settings(max_examples=400, deadline=None)
-@given(s=_nasty)
-def test_arrow_canon_matches_re_reference_nasty(s):
-    """_canon_arrow (RE2 kernels) must be bit-identical to _canon_pandas
-    (Python re) on arbitrary junk, not just well-formed URLs — this locks the
-    consuming rewrites of the three lookahead patterns."""
-    from csxj_crawler_spark.functions.urls import _canon_arrow
-
-    assert _canon_arrow(pd.Series([s])).iloc[0] == _canon_pandas(
-        pd.Series([s])
-    ).iloc[0]
-
-
-@settings(max_examples=200, deadline=None)
-@given(
-    scheme=st.sampled_from(["http", "HTTP", "https", "HtTpS"]),
-    host=_hosts,
-    port=st.sampled_from(["", ":80", ":443", ":8080"]),
-    path=_paths,
-    query=_queries,
-    extra=st.sampled_from(["", "&", "&&", "&utm_a=", "?"]),
-    frag=st.sampled_from(["", "#x"]),
-)
-def test_arrow_canon_matches_re_reference_urls(
-    scheme, host, port, path, query, extra, frag
-):
-    from csxj_crawler_spark.functions.urls import _canon_arrow
-
-    url = f"{scheme}://{host}{port}{path}"
-    if query:
-        url += "?" + query
-    url += extra + frag
-    a = _canon_arrow(pd.Series([url])).iloc[0]
-    r = _canon_pandas(pd.Series([url])).iloc[0]
-    assert a == r
