@@ -17,11 +17,10 @@ Public design (FAISS-style IVF-Flat, spherical k-means for cosine):
   caller persists the result ``partitionBy('cluster_id')`` so probes prune
   whole partitions at the parquet-scan level (asserted in
   tests/test_ann.py).
-* **Search** — score the k centroids against the query on the driver
-  (k·dim floats, trivial), probe the ``nprobe`` best inverted lists, exact
-  cosine inside the probed lists only, top-k.  Work scales with
-  ``nprobe / k`` of the data instead of all of it; recall vs the exact
-  brute-force baseline is asserted in tests.
+* **Search** — a table of queries: each probes its ``nprobe`` best
+  inverted lists, exact cosine inside the probed lists only, top-k.  Work
+  scales with ``nprobe / k`` of the data instead of all of it; recall vs
+  the exact brute-force baseline is asserted in tests.
 
 At 100 TB: train on a hashed sample (the ``sample_mod`` knob), k in the
 thousands; the only full-data passes are the final assignment (one narrow
@@ -44,6 +43,22 @@ IVF_ITERS = 5
 #: at nprobe=k.  Real embedding corpora cluster, so production setups run
 #: far smaller nprobe/k fractions; the test asserts the measured curve.
 IVF_NPROBE = 8
+
+
+def as_double(col):
+    return F.transform(col, lambda x: x.cast("double"))
+
+
+def dot(a, b):
+    """Left fold in array order, like DuckDB's ``list_sum``: the package's
+    one cosine (with ``norm``), bit-equal to the simops SQL oracles."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+
+
+def norm(a):
+    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
 def _normalize_rows(m: np.ndarray) -> np.ndarray:
@@ -84,7 +99,7 @@ def train_centroids(
     full table, only the final assignment does."""
     vecs = emb.select(
         F.col(id_col).alias("_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+        as_double(F.col(vec_col)).alias("_v"),
     )
     if sample_mod > 1:
         vecs = vecs.filter(F.pmod(F.xxhash64("_id"), F.lit(sample_mod)) == 0)
@@ -131,67 +146,13 @@ def build_index(
     prune unprobed lists at the file level."""
     return emb.withColumn(
         "cluster_id",
-        _assign_udf(centroids)(
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        ),
-    )
-
-
-def probe_clusters(
-    centroids: np.ndarray, query_vec: np.ndarray, nprobe: int = IVF_NPROBE
-) -> list[int]:
-    """The ``nprobe`` inverted lists nearest to the query (driver-side:
-    k·dim floats)."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-    if qn > 0:
-        q = q / qn
-    scores = _normalize_rows(centroids) @ q
-    order = np.lexsort((np.arange(len(scores)), -scores))
-    return [int(c) for c in order[:nprobe]]
-
-
-def search_topk(
-    index: DataFrame,
-    centroids: np.ndarray,
-    query_vec: list[float],
-    nprobe: int = IVF_NPROBE,
-    topk: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact cosine top-k inside the probed inverted lists only.
-
-    The ``cluster_id IN (...)`` filter is a plain partition predicate — on a
-    ``partitionBy('cluster_id')`` table it prunes unprobed lists before any
-    byte is read.  Scoring is JVM-side ``zip_with``/``aggregate`` (no
-    Python)."""
-    probed = probe_clusters(centroids, np.asarray(query_vec), nprobe)
-    qn = np.asarray(query_vec, dtype=np.float64)
-    nrm = np.linalg.norm(qn)
-    if nrm > 0:
-        qn = qn / nrm
-    qcol = F.array(*[F.lit(float(x)) for x in qn])
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(v, qcol, lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x
-    )
-    norm = F.sqrt(
-        F.aggregate(v, F.lit(0.0), lambda s, x: s + x * x)
-    )
-    return (
-        index.filter(F.col("cluster_id").isin(probed))
-        .withColumn("raw_cos", dot / norm)
-        .orderBy(F.desc("raw_cos"), id_col)
-        .limit(topk)
-        .select(id_col, "cluster_id", F.round("raw_cos", 6).alias("cosine"))
+        _assign_udf(centroids)(as_double(F.col(vec_col))),
     )
 
 
 def _probe_udf(centroids: np.ndarray, nprobe: int):
     """Pandas UDF: each query's ``nprobe`` nearest centroid ids (one matmul
-    per Arrow batch; ties to the lower cluster id — same order as
-    :func:`probe_clusters`, parity-tested)."""
+    per Arrow batch; ties to the lower cluster id)."""
     cT = np.ascontiguousarray(_normalize_rows(centroids).T)
 
     @F.pandas_udf(ArrayType(IntegerType()))
@@ -215,24 +176,21 @@ def search_topk_batch(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "embedding",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
-    """Batch form of :func:`search_topk`: score a TABLE of queries (a
-    production pipeline probes millions, not one) in a single plan.
+    """Exact cosine top-k of every query in a TABLE of queries, inside each
+    query's ``nprobe`` probed inverted lists only, in a single plan (one
+    query is a one-row table).
 
     Shape: probe assignment is the same per-batch matmul UDF as indexing
     (centroids ride the closure broadcast), exploded to one
-    ``(query_id, cluster_id)`` row per probed list, then an equi-join on
-    ``cluster_id`` against the index.  With ``broadcast_queries`` (the
-    common case — queries ≪ index) the join is broadcast-hash on the
-    query side, so the index streams ONCE with no shuffle, and on a
+    ``(query_id, cluster_id)`` row per probed list, then a broadcast-hash
+    equi-join on ``cluster_id`` against the index (queries ≪ index), so the
+    index streams ONCE with no shuffle, and on a
     ``partitionBy('cluster_id')`` table Spark's dynamic partition pruning
     skips unprobed lists at the file level (asserted in tests/test_ann.py).
-    For query tables too big to broadcast, pass ``False`` — both sides
-    hash-shuffle on ``cluster_id``, which the index layout co-locates.
     Scoring stays JVM-side (``zip_with``/``aggregate``); per-query top-k is
     a window over the probed candidates only."""
-    qv = F.transform(F.col(query_vec_col), lambda x: x.cast("double"))
+    qv = as_double(F.col(query_vec_col))
     q = (
         queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -241,21 +199,11 @@ def search_topk_batch(
         )
         .select("query_id", "_q", F.explode("_probes").alias("cluster_id"))
     )
-    qj = F.broadcast(q) if broadcast_queries else q
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(v, F.col("_q"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda s, x: s + x,
-    )
-    vn = F.sqrt(F.aggregate(v, F.lit(0.0), lambda s, x: s + x * x))
-    qn = F.sqrt(
-        F.aggregate(F.col("_q"), F.lit(0.0), lambda s, x: s + x * x)
-    )
+    v = as_double(F.col(vec_col))
     w = Window.partitionBy("query_id").orderBy(F.desc("raw_cos"), id_col)
     return (
-        index.join(qj, "cluster_id")
-        .withColumn("raw_cos", dot / (vn * qn))
+        index.join(F.broadcast(q), "cluster_id")
+        .withColumn("raw_cos", dot(v, F.col("_q")) / (norm(v) * norm(F.col("_q"))))
         .withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= topk)
         .select(

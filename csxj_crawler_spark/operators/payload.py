@@ -1,5 +1,5 @@
-"""Image payload path: decode → validate → pHash → near-dup prune
-(BASELINE.json:6/15; SURVEY.md §2.3 D6, §2.10).
+"""Image payload path: decode → validate → pHash → near-dup prune over
+``banding.hamming_pairs`` (BASELINE.json:6/15; SURVEY.md §2.3 D6, §2.10).
 
 All per-image work happens inside Arrow-batched ``mapInPandas`` /
 ``applyInPandas`` over the ``images_captions`` table (exact input_hint
@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from csxj_crawler_spark import spec
 from csxj_crawler_spark.functions import images as I
+from csxj_crawler_spark.operators import banding
 
 
 def decode_phash_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -104,63 +105,14 @@ def validate_payloads(images: DataFrame, golden: DataFrame) -> DataFrame:
     )
 
 
-def phash_neardup_pairs(
-    images: DataFrame, t: int = spec.PHASH_HAMMING_T
-) -> DataFrame:
-    """D6 candidate generation: 4×16-bit LSH bands over the 64-bit phash →
-    equi-join on (band_id, band_val) → exact Hamming verify via
-    ``bit_count(a ^ b)``.
-
-    Pigeonhole: with ≤ 3 differing bits at least one of the 4 bands is
-    untouched, so recall = 1 for t ≤ 3.  For 4 ≤ t ≤ 6 a pathological pair
-    could spread flips across all 4 bands and be missed; tests measure
-    recall against brute force on the fixtures (the generator's near-dups
-    cluster their flips, so fixture recall is 1)."""
-    bands = images.select(
-        "image_id",
-        "phash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("phash"), k * 16).bitwiseAND(F.lit(0xFFFF))
-                    for k in range(4)
-                ]
-            )
-        ).alias("band_id", "band_val"),
-    )
-    # occupancy cap (spec.BAND_BUCKET_CAP): flat/monochrome images share a
-    # phash band value; without the cap one degenerate bucket goes O(k²)
-    from csxj_crawler_spark.operators import banding
-
-    bands, _obs = banding.cap_band_buckets(
-        bands, ["band_id", "band_val"], "image_id"
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.image_id") < F.col("b.image_id")),
-        )
-        .select(
-            F.col("a.image_id").alias("img_a"),
-            F.col("b.image_id").alias("img_b"),
-            F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash"))).alias(
-                "hamming"
-            ),
-        )
-        .dropDuplicates(["img_a", "img_b"])
-        .filter(F.col("hamming") <= t)
-    )
-
-
 def phash_prune_keep_first(images: DataFrame, t: int = spec.PHASH_HAMMING_T) -> DataFrame:
     """D6 prune rule: drop an image when a lexicographically-smaller image_id
-    exists within Hamming t (greedy keep-first, matching the frontier's
-    keep-min-discovered_seq semantics)."""
-    pairs = phash_neardup_pairs(images, t)
-    dropped = pairs.select(F.col("img_b").alias("image_id")).distinct()
+    shares one of its four 16-bit phash bands and lies within Hamming t
+    (greedy keep-first, matching the frontier's keep-min-discovered_seq
+    semantics).  The pairs come from :func:`banding.hamming_pairs`, the band
+    join SimHash uses; its cap bounds the bucket flat images share."""
+    pairs, _obs = banding.hamming_pairs(images, "image_id", "phash", t)
+    dropped = pairs.select(F.col("image_id_b").alias("image_id")).distinct()
     return images.join(dropped, "image_id", "left_anti")
 
 

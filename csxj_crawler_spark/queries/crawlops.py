@@ -1,5 +1,5 @@
 """Crawl-engine operators exposed under the driver contract (SURVEY.md §2.1-
-2.7 crawl rows): canonicalization (expr + Arrow-UDF variants), wave-0
+2.7 crawl rows): canonicalization (``canonicalize_expr``), wave-0
 frontier bootstrap, the full judged crawl (order / seen set / metrics /
 robots exclusions).
 

@@ -3,8 +3,9 @@ MinHash+LSH (shingle → minhash → band → bucket-join) and SimHash banding.
 
 Signatures are computed in vectorized pandas UDFs (Arrow batches, numpy
 matrix math — no per-row Python); candidate generation and verification are
-pure DataFrame ops (explode → equi-join on band buckets), the same banding
-pattern the crawl engine uses for pHash image near-dups (SURVEY.md §2.3 D6).
+pure DataFrame ops in ``operators/banding.py``: MinHash bands go through
+``band_pairs``, SimHash through ``hamming_pairs``, the band join the pHash
+image prune uses too (SURVEY.md §2.3 D6).
 
 No SQL oracle (driver records rows-only): MinHash permutations are not
 expressible in ANSI SQL — tests verify recall against the exact n-gram
@@ -178,42 +179,16 @@ def q_dedup_minhash_lsh(spark, sf_dir) -> DataFrame:
 
 
 def q_dedup_simhash(spark, sf_dir) -> DataFrame:
-    """Near-dup pairs with SimHash Hamming distance ≤ 6 via 4×16-bit band
-    blocking, verified with ``bit_count(a^b)`` — the same plan as the crawl
-    engine's pHash prune (D6)."""
+    """Near-dup pairs with SimHash Hamming distance ≤ 6 via
+    ``banding.hamming_pairs`` — the same band join as the pHash prune (D6).
+    Empty documents all SimHash to one signature; the join's occupancy cap
+    bounds that bucket."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", simhash64(F.col("text")).alias("sig")
     )
-    bands = d.select(
-        "doc_id",
-        "sig",  # one long — cheaper riding the join than two re-attach joins
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("sig"), k * 16).bitwiseAND(F.lit(0xFFFF))
-                    for k in range(4)
-                ]
-            )
-        ).alias("band_id", "band_val"),
-    )
-    # occupancy cap: empty documents all SimHash to the same signature, so
-    # ONE 16-bit band value can hold the whole degenerate class at 100 TB
-    bands, _obs = banding.cap_band_buckets(bands, ["band_id", "band_val"], "doc_id")
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig"))).alias("hamming"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-        .filter(F.col("hamming") <= 6)
+    pairs, _obs = banding.hamming_pairs(d, "doc_id", "sig", 6)
+    return pairs.select(
+        F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b"), "hamming"
     )
 
 

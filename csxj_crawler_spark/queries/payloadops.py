@@ -1,6 +1,6 @@
 """Payload-path operators under the driver contract: decode fidelity,
-pHash recomputation, pHash near-dup LSH, multimodal feature plumbing
-(BASELINE.json:15; SURVEY.md §2.10, D6).
+pHash recomputation, pHash near-dup pairs (``banding.hamming_pairs``),
+multimodal feature plumbing (BASELINE.json:15; SURVEY.md §2.10, D6).
 
 Oracles are VALUES computed by a local numpy loop over the fixture parquet
 (independent of Spark's execution path — same codecs library, but the claim
@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from csxj_crawler_spark import spec
 from csxj_crawler_spark.functions import images as I
+from csxj_crawler_spark.operators import banding
 from csxj_crawler_spark.operators import payload as P
 from csxj_crawler_spark.queries._fixture import tiny_fixture_dir, values_sql
 
@@ -104,7 +105,14 @@ def _sql_phash_recompute() -> str:
 def q_image_phash_neardup(spark, sf_dir):
     d = tiny_fixture_dir()
     images = spark.read.parquet(f"{d}/images_captions.parquet")
-    return P.phash_neardup_pairs(images, spec.PHASH_HAMMING_T)
+    pairs, _obs = banding.hamming_pairs(
+        images, "image_id", "phash", spec.PHASH_HAMMING_T
+    )
+    return pairs.select(
+        F.col("image_id_a").alias("img_a"),
+        F.col("image_id_b").alias("img_b"),
+        "hamming",
+    )
 
 
 def _sql_phash_neardup() -> str:

@@ -3,14 +3,18 @@ first-class component): brute-force cosine top-k as the exact baseline, an
 LSH-bucketed variant as the scale path, plus vector stats.
 
 Dot products run JVM-side via ``zip_with``/``aggregate`` higher-order
-functions (no Python in the hot path); everything is cast to double before
-arithmetic so Spark and DuckDB agree bit-for-bit after round(…, 6).
+functions (no Python in the hot path) — the ``as_double``/``dot``/``norm``
+expressions of ``operators/ann.py``, which the IVF search scores with too;
+everything is cast to double before arithmetic so Spark and DuckDB agree
+bit-for-bit after round(…, 6).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from csxj_crawler_spark.operators import banding
+from csxj_crawler_spark.operators.ann import as_double, dot, norm
 
 QUERY_VEC_ID = 0
 TOP_K = 10
@@ -20,25 +24,11 @@ def _emb(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def _as_double(col):
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
-def _norm(a):
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
 # --------------------------------------------------------------------------
 # brute-force cosine top-k against a fixed query vector (exact baseline)
 # --------------------------------------------------------------------------
 def q_sim_cosine_topk(spark, sf_dir):
-    e = _emb(spark, sf_dir).withColumn("emb_d", _as_double(F.col("embedding")))
+    e = _emb(spark, sf_dir).withColumn("emb_d", as_double(F.col("embedding")))
     q = (
         e.filter(F.col("vec_id") == QUERY_VEC_ID)
         .select(F.col("emb_d").alias("qv"))
@@ -46,7 +36,7 @@ def q_sim_cosine_topk(spark, sf_dir):
     scored = (
         e.filter(F.col("vec_id") != QUERY_VEC_ID)
         .crossJoin(F.broadcast(q))
-        .withColumn("raw_cos", _dot(F.col("emb_d"), F.col("qv")) / (_norm(F.col("emb_d")) * _norm(F.col("qv"))))
+        .withColumn("raw_cos", dot(F.col("emb_d"), F.col("qv")) / (norm(F.col("emb_d")) * norm(F.col("qv"))))
         .select("vec_id", "label", F.round("raw_cos", 6).alias("cosine"), "raw_cos")
         .orderBy(F.desc("raw_cos"), "vec_id")
         .limit(TOP_K)
@@ -76,9 +66,9 @@ FROM scored ORDER BY raw_cos DESC, vec_id LIMIT {TOP_K}
 # vector stats per label: norms + dimension checks (sanity/aggregates)
 # --------------------------------------------------------------------------
 def q_sim_vector_stats(spark, sf_dir):
-    e = _emb(spark, sf_dir).withColumn("emb_d", _as_double(F.col("embedding")))
+    e = _emb(spark, sf_dir).withColumn("emb_d", as_double(F.col("embedding")))
     return (
-        e.select("label", F.size("embedding").alias("dim"), _norm(F.col("emb_d")).alias("nrm"))
+        e.select("label", F.size("embedding").alias("dim"), norm(F.col("emb_d")).alias("nrm"))
         .groupBy("label", "dim")
         .agg(
             F.count("*").alias("n"),
@@ -107,7 +97,7 @@ COS_T = 0.45  # tuned to the testdata's cosine distribution (max pair ≈ 0.51)
 
 def q_dedup_embedding_cosine(spark, sf_dir):
     e = _emb(spark, sf_dir).select(
-        "vec_id", _as_double(F.col("embedding")).alias("emb_d")
+        "vec_id", as_double(F.col("embedding")).alias("emb_d")
     )
     a = e.alias("a")
     b = e.alias("b")
@@ -115,8 +105,8 @@ def q_dedup_embedding_cosine(spark, sf_dir):
         a.join(F.broadcast(b), F.col("a.vec_id") < F.col("b.vec_id"))
         .withColumn(
             "raw_cos",
-            _dot(F.col("a.emb_d"), F.col("b.emb_d"))
-            / (_norm(F.col("a.emb_d")) * _norm(F.col("b.emb_d"))),
+            dot(F.col("a.emb_d"), F.col("b.emb_d"))
+            / (norm(F.col("a.emb_d")) * norm(F.col("b.emb_d"))),
         )
         .filter(F.col("raw_cos") >= COS_T)
         .select(
@@ -168,7 +158,7 @@ def _plane(seed: int, dim: int = 64) -> list[float]:
 
 
 def q_sim_lsh_ann(spark, sf_dir):
-    e = _emb(spark, sf_dir).withColumn("emb_d", _as_double(F.col("embedding")))
+    e = _emb(spark, sf_dir).withColumn("emb_d", as_double(F.col("embedding")))
     dim = 64
     band_cols = []
     for band in range(N_BANDS):
@@ -177,7 +167,7 @@ def q_sim_lsh_ann(spark, sf_dir):
             plane = F.array(
                 *[F.lit(v) for v in _plane(band * PLANES_PER_BAND + p + 1, dim)]
             )
-            bit = (_dot(F.col("emb_d"), plane) > 0).cast("int")
+            bit = (dot(F.col("emb_d"), plane) > 0).cast("int")
             sig = bit if sig is None else sig * 2 + bit
         band_cols.append(sig)
     e = e.withColumn(
@@ -193,8 +183,6 @@ def q_sim_lsh_ann(spark, sf_dir):
     # occupancy-capped self-join (spec.BAND_BUCKET_CAP): a dense hyperplane
     # bucket (e.g. all-zero embeddings) cannot go quadratic; drop count is
     # observable via the banding helper's Observation
-    from csxj_crawler_spark.operators import banding
-
     cand, _obs = banding.band_pairs(bands, ["band_id", "band_val"], "vec_id")
     cand = cand.select(
         F.col("vec_id_a").alias("vec_a"), F.col("vec_id_b").alias("vec_b")
@@ -211,7 +199,7 @@ def q_sim_lsh_ann(spark, sf_dir):
         )
         .withColumn(
             "raw_cos",
-            _dot(F.col("ea"), F.col("eb")) / (_norm(F.col("ea")) * _norm(F.col("eb"))),
+            dot(F.col("ea"), F.col("eb")) / (norm(F.col("ea")) * norm(F.col("eb"))),
         )
         .filter(F.col("raw_cos") >= LSH_COS_T)
         .select("vec_a", "vec_b", F.round("raw_cos", 6).alias("cosine"))

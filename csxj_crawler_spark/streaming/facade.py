@@ -81,10 +81,7 @@ def run_streaming_crawl(
     eng = CrawlEngine(spark, store, **(engine_kwargs or {}))
 
     def _one_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if store.manifest("queued") is None:
-            eng.bootstrap(batch_df)
-        else:
-            eng.inject_seeds(batch_df)
+        eng.inject_seeds(batch_df)  # bootstraps the first batch
         eng.run(batch_df, graph, robots, max_waves=max_waves_per_batch)
 
     q = (

@@ -1,5 +1,6 @@
-"""IVF ANN index (operators/ann.py): determinism, recall vs the exact
-brute-force baseline, and partition pruning of unprobed inverted lists."""
+"""IVF ANN index (operators/ann.py): determinism, recall of the batch
+search vs the exact brute-force baseline, and dynamic partition pruning of
+unprobed inverted lists."""
 
 from __future__ import annotations
 
@@ -38,91 +39,76 @@ def test_index_covers_all_rows(emb, centroids):
     assert all(0 <= r["cluster_id"] < ann.IVF_K for r in stats)
 
 
-def _exact_topk(emb, qv: np.ndarray, exclude_id: int, k: int = 10) -> list[int]:
-    rows = emb.select("vec_id", "embedding").collect()
+@pytest.fixture(scope="module")
+def vectors(emb) -> dict[int, np.ndarray]:
+    return {
+        r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
+        for r in emb.select("vec_id", "embedding").collect()
+    }
+
+
+def _exact_topk(vectors, qv: np.ndarray, k: int = 10) -> list[tuple[int, float]]:
+    """Brute-force cosine top-k as ``(vec_id, cosine)``, ties to the lower id."""
     q = qv / np.linalg.norm(qv)
-    scored = []
-    for r in rows:
-        if r["vec_id"] == exclude_id:
-            continue
-        v = np.asarray(r["embedding"], dtype=np.float64)
-        scored.append((float(v @ q / np.linalg.norm(v)), -r["vec_id"]))
-    scored.sort(reverse=True)
-    return [-i for _, i in scored[:k]]
+    scored = sorted(
+        (-float(v @ q / np.linalg.norm(v)), i) for i, v in vectors.items()
+    )
+    return [(i, -c) for c, i in scored[:k]]
 
 
-def test_recall_vs_brute_force(emb, centroids):
-    """recall@10 over 5 query vectors: >= 0.8 at the default nprobe=8/k=16,
-    strictly above the ~nprobe/k floor at nprobe=4 (centroid ranking carries
-    signal even on this near-uniform synthetic data), and exactly 1.0 at
-    nprobe=k where IVF degenerates to exhaustive search."""
-    queries = emb.filter(F.col("vec_id") < 5).collect()
-    idx = ann.build_index(emb, centroids).cache()
+def _batch_topk(res) -> dict[int, list]:
+    """search_topk_batch rows → ``{query_id: [(rank, vec_id, cosine), ...]}``."""
+    by_q: dict[int, list] = {}
+    for r in res.collect():
+        by_q.setdefault(r["query_id"], []).append((r["rank"], r["vec_id"], r["cosine"]))
+    return {q: sorted(rows) for q, rows in by_q.items()}
+
+
+def test_recall_vs_brute_force(emb, centroids, vectors):
+    """recall@10 over 5 query vectors (left out of the index): >= 0.8 at the
+    default nprobe=8/k=16, strictly above the ~nprobe/k floor at nprobe=4
+    (centroid ranking carries signal even on this near-uniform synthetic
+    data), and exactly 1.0 at nprobe=k where IVF degenerates to exhaustive
+    search."""
+    is_query = F.col("vec_id") < 5
+    queries = emb.filter(is_query).select(F.col("vec_id").alias("query_id"), "embedding")
+    idx = ann.build_index(emb.filter(~is_query), centroids).cache()
+    indexed = {i: v for i, v in vectors.items() if i >= 5}
     got = {4: 0, ann.IVF_NPROBE: 0, ann.IVF_K: 0}
-    for r in queries:
-        qv = np.asarray(r["embedding"], dtype=np.float64)
-        truth = set(_exact_topk(emb, qv, r["vec_id"]))
-        for nprobe in got:
-            res = ann.search_topk(
-                idx.filter(F.col("vec_id") != r["vec_id"]), centroids,
-                list(qv), nprobe=nprobe, topk=10,
-            ).collect()
-            got[nprobe] += len(truth & {x["vec_id"] for x in res})
-    n = 10 * len(queries)
+    for nprobe in got:
+        res = _batch_topk(
+            ann.search_topk_batch(idx, centroids, queries, nprobe=nprobe, topk=10)
+        )
+        for qid in range(5):
+            truth = {i for i, _ in _exact_topk(indexed, vectors[qid])}
+            got[nprobe] += len(truth & {i for _, i, _ in res.get(qid, [])})
+    n = 10 * 5
     assert got[ann.IVF_K] == n  # nprobe=k == exact
     assert got[ann.IVF_NPROBE] / n >= 0.8
     assert got[4] / n > 4 / ann.IVF_K + 0.1  # beats the random-lists floor
 
 
-def test_search_prunes_unprobed_partitions(emb, centroids, spark, tmp_path):
-    """On a partitionBy(cluster_id) index table the probe filter must reach
-    the scan as a partition filter — unprobed inverted lists are never
-    read."""
-    path = str(tmp_path / "ivf_index")
-    ann.build_index(emb, centroids).write.partitionBy("cluster_id").parquet(path)
-    idx = spark.read.parquet(path)
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    res = ann.search_topk(idx, centroids, qv, nprobe=2, topk=5)
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cluster_id" in plan.split(
-        "PartitionFilters"
-    )[1][:200]
-    assert res.count() == 5
-
-
-def test_batch_search_matches_single_and_prunes(emb, centroids, spark, tmp_path):
-    """search_topk_batch (r4): a TABLE of queries in one plan must return,
-    per query, exactly what per-query search_topk returns (same probes, same
-    scores, same tie-breaks), and with broadcast_queries=True over a
-    partitionBy(cluster_id) table the join's dynamic partition pruning must
-    reach the scan so unprobed lists are skipped at the file level."""
+def test_batch_search_matches_single_and_prunes(emb, centroids, vectors, spark, tmp_path):
+    """search_topk_batch at nprobe=k scores every inverted list, so each
+    query of the table must get exactly the brute-force top-k (same ids,
+    same ranks, cosines within 1e-6), and over a partitionBy(cluster_id)
+    table the broadcast join's dynamic partition pruning must reach the scan
+    so unprobed lists are skipped at the file level."""
     path = str(tmp_path / "ivf_index_batch")
     ann.build_index(emb, centroids).write.partitionBy("cluster_id").parquet(path)
     idx = spark.read.parquet(path)
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    res = ann.search_topk_batch(idx, centroids, queries, nprobe=4, topk=10)
+    res = ann.search_topk_batch(idx, centroids, queries, nprobe=ann.IVF_K, topk=10)
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower() or "PartitionFilters: [isnotnull" in plan
-    by_q: dict[int, list] = {}
-    for r in res.collect():
-        by_q.setdefault(r["query_id"], []).append(
-            (r["rank"], r["vec_id"], r["cosine"])
-        )
+    by_q = _batch_topk(res)
     assert set(by_q) == {0, 1, 2, 3, 4}
-    for r in queries.collect():
-        qv = [float(x) for x in r["embedding"]]
-        single = ann.search_topk(idx, centroids, qv, nprobe=4, topk=10).collect()
-        want = [
-            (i + 1, s["vec_id"], s["cosine"]) for i, s in enumerate(single)
+    for qid, rows in by_q.items():
+        want = _exact_topk(vectors, vectors[qid])
+        assert [(rk, i) for rk, i, _ in rows] == [
+            (rk + 1, i) for rk, (i, _) in enumerate(want)
         ]
-        assert sorted(by_q[r["query_id"]]) == want
-
-    # shuffle-join variant (huge query tables): same rows
-    res2 = ann.search_topk_batch(
-        idx, centroids, queries, nprobe=4, topk=10, broadcast_queries=False
-    )
-    a = {(r["query_id"], r["rank"], r["vec_id"]) for r in res.collect()}
-    b = {(r["query_id"], r["rank"], r["vec_id"]) for r in res2.collect()}
-    assert a == b
+        for (_, _, got_cos), (_, want_cos) in zip(rows, want):
+            assert abs(got_cos - want_cos) <= 1e-6

@@ -43,13 +43,21 @@ def test_broadcast_join_for_dims(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_no_cartesian_in_band_self_joins(spark, fix_dir):
-    from csxj_crawler_spark.operators.payload import phash_neardup_pairs
+def test_no_cartesian_in_band_self_joins(spark, fix_dir, sf_dir):
+    """Both Hamming families (pHash images, SimHash documents) band-join on
+    equi-keys."""
+    from csxj_crawler_spark.operators.banding import hamming_pairs
+    from csxj_crawler_spark.queries.dedupops import simhash64
 
     images = spark.read.parquet(f"{fix_dir}/images_captions.parquet")
-    plan = _plan(phash_neardup_pairs(images))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", simhash64(F.col("text")).alias("sig")
+    )
+    for frame, id_col, hash_col in ((images, "image_id", "phash"), (docs, "doc_id", "sig")):
+        pairs, _obs = hamming_pairs(frame, id_col, hash_col, 6)
+        plan = _plan(pairs)
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
 
 
 def _exchange_blocks(df) -> list[str]:
